@@ -59,14 +59,6 @@ def _chunks(data: bytes):
             return
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def _unfilter(raw: bytes, width: int, height: int, ch: int) -> np.ndarray:
     """Reverse per-scanline filtering -> (height, width*ch) uint8.
 

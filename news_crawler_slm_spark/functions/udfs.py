@@ -16,14 +16,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .html_clean import clean_html, extract_plaintext
-from .text import (
-    bpeish_token_count,
-    detect_language,
-    repetition_severity_ratio,
-    rolling_fingerprint,
-    shingles,
-)
+from .html_clean import clean_html
+from .text import detect_language
 
 
 def _as_str(v: object) -> str:
@@ -41,35 +35,8 @@ def clean_html_udf(html: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.StringType())
-def extract_plaintext_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda v: extract_plaintext(_as_str(v)))
-
-
-@F.pandas_udf(T.LongType())
-def bpeish_token_count_udf(text: pd.Series) -> pd.Series:
-    """F2 — subword-ish token count (HF-tokenizer stand-in, step_04:14-17)."""
-    return text.map(lambda v: bpeish_token_count(_as_str(v))).astype("int64")
-
-
-@F.pandas_udf(T.DoubleType())
-def repetition_ratio_udf(text: pd.Series) -> pd.Series:
-    """F5 — repeated-5-gram severity ratio (omit_degeneration.py:13-30)."""
-    return text.map(lambda v: repetition_severity_ratio(_as_str(v))).astype("float64")
-
-
-@F.pandas_udf(T.StringType())
 def detect_language_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda v: detect_language(_as_str(v)))
-
-
-@F.pandas_udf(T.LongType())
-def fingerprint_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda v: rolling_fingerprint(_as_str(v))).astype("int64")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def shingles_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda v: shingles(_as_str(v)))
 
 
 @F.pandas_udf(T.StringType())

@@ -122,6 +122,29 @@ def build_cases() -> dict[str, str]:
         '<body><div class="ad-wrap"><p>lost</p><em>also lost</em></div><p>kept</p></body>'
     )
 
+    # 11. streaming corners: end tags that pop removed elements, removed
+    # elements open at end of input, comments under raw-text parents and
+    # inside removed subtrees, void/self-closing forms of kept and removed tags
+    cases["misnested_close_removed_ancestor"] = "<div><a><p>x</div>y"
+    cases["removed_open_at_eof"] = "<body><p>k</p><nav><p>menu<div>deep <b>er"
+    cases["comment_in_pre"] = "<body><pre>a<!-- x < y & <img src=i> z -->b</pre></body>"
+    cases["comment_in_textarea"] = "<body><textarea><!-- <b>t</b> & > --></textarea></body>"
+    cases["ldjson_in_ad_div"] = (
+        '<body><div class="ad"><script type="application/ld+json">{"k": 1}</script>'
+        "</div><p>k</p></body>"
+    )
+    cases["comment_in_removed"] = (
+        "<body><nav><!-- menu text --></nav><div id='sponsored'><p><!-- x --></p>"
+        "<!DOCTYPE html></div><p>k</p></body>"
+    )
+    cases["void_style_and_selfclose_ad"] = (
+        '<body><p>a<br style="x" class="c">b</p><div class="ad"/><p>c</p>'
+        '<section id="ad-1"/><em>d</em></body>'
+    )
+    cases["stray_end_in_removed_nav"] = (
+        "<body><nav><p>m</span></p></em></nav><p>k</p></body>"
+    )
+
     return cases
 
 

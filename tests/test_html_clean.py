@@ -11,11 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from news_crawler_slm_spark.functions.html_clean import (
-    TAGS_TO_REMOVE,
-    clean_html,
-    extract_plaintext,
-)
+from news_crawler_slm_spark.functions.html_clean import TAGS_TO_REMOVE, clean_html
 from news_crawler_slm_spark.functions.udfs import clean_html_udf
 
 
@@ -109,44 +105,68 @@ def test_idempotence_and_determinism():
     assert clean_html(clean_html(once)) == clean_html(once)
 
 
-def test_extract_plaintext():
-    txt = extract_plaintext("<body><nav>menu</nav><p>Hello <em>world</em></p><script>x</script></body>")
-    assert txt == "Hello world"
+# Marked sections _markupbase rejects; the HTML5 tokenizer reads each as a
+# bogus comment up to the next '>' or the end of input.
+BAD_MARKED_SECTIONS = {
+    "<![a<": "[a&lt;",
+    "<![<": "[&lt;",
+    "<p>x<![<b>y</b></p>": "<p>\n x\n [&lt;b\n y\n</p>",
+}
+
+
+def test_clean_html_is_total():
+    for html, want in BAD_MARKED_SECTIONS.items():
+        assert clean_html(html) == want, repr(html)
+
+
+def test_udf_survives_bad_marked_section(spark):
+    """One unparseable page must not fail the batch (and with it the crawl
+    round's pages write)."""
+    rows = [("good1", "<p>one</p>")]
+    rows += [(f"bad{i}", html) for i, html in enumerate(BAD_MARKED_SECTIONS)]
+    rows += [("good2", "<div class='ad'>x</div><p>two</p>")]
+    df = spark.createDataFrame(
+        [(u, h.encode("utf-8")) for u, h in rows], "url string, html binary"
+    ).coalesce(1)
+    got = {
+        r["url"]: r["text"]
+        for r in df.select("url", clean_html_udf(F.col("html")).alias("text")).collect()
+    }
+    assert got == {u: clean_html(h) for u, h in rows}
+    assert got["good2"] == "<p>\n two\n</p>"
 
 
 # ---------------------------------------------------------------- fast path
 
-def _stdlib_root(html):
-    from news_crawler_slm_spark.functions.html_clean import _DomParser
+def _feeds_agree(html):
+    """The strict fast scanner and the stdlib tokenizer, each driving a fresh
+    emitter, must write identical output.
 
-    p = _DomParser()
-    p.feed(html)
-    p.close()
-    return p.root
-
-
-def _roots_equal_output(html):
-    """Fast-scanner DOM must serialize identically to the stdlib DOM.
-
-    _prettify is the observable surface (chunk boundaries, attrs, comments,
-    decls all serialize); a fast-path refusal means _parse falls back to the
-    stdlib parser, so equality holds by construction."""
+    The emitter's output is the observable surface (text chunk boundaries,
+    attrs, comments, decls all serialize); a fast-path refusal means
+    clean_html reruns the stdlib feed, so equality holds by construction."""
     from news_crawler_slm_spark.functions.html_clean import (
+        _Emitter,
         _FastPathUnsupported,
-        _fast_parse,
-        _prettify,
+        _fast_feed,
+        _StdlibFeed,
     )
 
+    fast = _Emitter()
     try:
-        fast = _fast_parse(html)
+        _fast_feed(html, fast)
     except _FastPathUnsupported:
         return True
-    return _prettify(fast) == _prettify(_stdlib_root(html))
+    slow = _Emitter()
+    feed = _StdlibFeed(slow)
+    feed.feed(html)
+    feed.close()
+    return fast.finish() == slow.finish()
 
 
 def test_fast_scanner_equivalence_fixtures(fixtures_dir):
     for name, html, _gold in _load_fixture_pairs(fixtures_dir):
-        assert _roots_equal_output(html), name
+        assert _feeds_agree(html), name
 
 
 ADVERSARIAL = [
@@ -194,7 +214,7 @@ ADVERSARIAL = [
 
 def test_fast_scanner_equivalence_adversarial():
     for html in ADVERSARIAL:
-        assert _roots_equal_output(html), repr(html)
+        assert _feeds_agree(html), repr(html)
 
 
 def test_fast_scanner_fuzz_equivalence():
@@ -204,12 +224,17 @@ def test_fast_scanner_fuzz_equivalence():
         ["<", ">", "/", "=", '"', "'", "&", ";", "!", "-", "?", " ", "\n",
          "a", "b", "p", "x", "div", "<div>", "</div>", "<br/>", "<script>",
          "</script>", "<!--", "-->", "&amp;", "&#65;", "class", "style",
-         "<a href=", "<!doctype html>", "]]>", "<!["]
+         "<a href=", "<!doctype html>", "]]>", "<![",
+         # removal-relevant tokens: removed subtrees, raw-text parents,
+         # style stripping, comment rewriting
+         "<div class='ad'>", "<section id=sponsored>", "<nav>", "<pre>",
+         "<textarea>", "<script type='application/ld+json'>", "<p style='c'>",
+         "<!-- <img src=x> t -->"]
     )
 
     @settings(max_examples=300, deadline=None)
     @given(st.lists(tokens, max_size=30).map("".join))
     def check(html):
-        assert _roots_equal_output(html), repr(html)
+        assert _feeds_agree(html), repr(html)
 
     check()
