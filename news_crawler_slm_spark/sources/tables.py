@@ -139,17 +139,11 @@ class SnapshotCatalog:
             out = out.unionByName(d)
         return out
 
-    def lineage(self, limit: int | None = None) -> list[Snapshot]:
-        """Snapshots from current back to the root (lineage chain).
-
-        ``limit`` bounds the walk to the newest N snapshots — each step is
-        one manifest read, so an unbounded walk per streaming micro-batch
-        is O(#snapshots) reads per batch and O(N²) over a stream's
-        lifetime (ADVICE r06); callers that only need recent history
-        (crash-replay dedup checks) pass a small limit."""
+    def lineage(self) -> list[Snapshot]:
+        """Snapshots from current back to the root (lineage chain)."""
         out: list[Snapshot] = []
         sid = self.current_snapshot_id()
-        while sid is not None and (limit is None or len(out) < limit):
+        while sid is not None:
             try:
                 snap = self.snapshot(sid)
             except FileNotFoundError:
@@ -160,25 +154,6 @@ class SnapshotCatalog:
                 break
             out.append(snap)
             sid = snap.parent_id
-        return out
-
-    def committed_snapshot_ids_on_disk(self) -> set[int]:
-        """Every snapshot id with a manifest file present — ONE directory
-        listing, zero manifest reads.  A superset of the reachable chain
-        (it includes orphans from crashes mid-commit); cheap enough to
-        call per streaming micro-batch where a full :meth:`lineage` walk
-        is not (ADVICE r06: O(dirents) vs O(manifest reads))."""
-        out: set[int] = set()
-        try:
-            names = os.listdir(os.path.join(self.root, "manifests"))
-        except FileNotFoundError:
-            return out
-        for n in names:
-            if n.startswith("snap-") and n.endswith(".json"):
-                try:
-                    out.add(int(n[5:-5]))
-                except ValueError:
-                    continue
         return out
 
     def read_table_incremental(

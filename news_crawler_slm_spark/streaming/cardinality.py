@@ -13,18 +13,9 @@ the END-TO-END proof of the mergeability claim in operators/hll.py: per
 batch, sketch ONLY the new rows (``hll_registers``), then fold into the
 persisted register table by per-register max.
 
-Exactly-once: the register table lives in the SnapshotCatalog; each batch
-commits with a CONTENT fingerprint (sorted input-file list; sketch-delta
-registers when the source isn't file-backed) in its snapshot counters. A
-replayed batch after a crash between sink-commit and checkpoint-write
-finds (batchId, fingerprint) already on the lineage and skips. Keying the
-dedup on CONTENT, not batchId alone (ADVICE r05), closes the
-fresh-checkpoint hole: if the checkpoint is deleted/replaced while NEW
-source files exist, availableNow re-batches everything as batch 0 — same
-batchId, different content — and the sink now FOLDS it (max-merge is
-idempotent, so re-folding the already-seen subset is harmless while the
-new files' values land) instead of silently skipping. Either way the
-registers stay exact; the skip path merely keeps the lineage clean.
+Exactly-once is the shared key-ledger protocol of streaming/catalog_sink.py.
+Max-merge is idempotent, so here the ledger only spares a replay its
+commit; re-folding replayed rows would leave the registers unchanged.
 
 Stream ≡ batch equivalence is pinned in tests/test_streaming.py: running
 the files through this sink yields the IDENTICAL register table (and so
@@ -33,16 +24,28 @@ the identical estimate) as one batch ``hll_registers`` over the union.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.hll import DEFAULT_P, hll_registers
 from ..sources.tables import SnapshotCatalog
+from .catalog_sink import exactly_once_stream, merged_with
 
-HLL_STREAM_ID_BASE = 2_100_000_000
 REGISTER_TABLE = "hll_registers"
+
+
+def hll_fold(col: str, p: int = DEFAULT_P):
+    """Fold of the register sink: sketch only the new rows, then max-merge
+    them into the persisted register table (an m-row-max rewrite)."""
+
+    def fold(cat: SnapshotCatalog, rows: DataFrame):
+        delta = hll_registers(rows, col, p)
+        merged = merged_with(
+            cat, REGISTER_TABLE, delta, ["register"], F.max("rank").alias("rank")
+        )
+        return {REGISTER_TABLE: merged}, {}
+
+    return fold
 
 
 def stream_hll_registers(
@@ -51,7 +54,6 @@ def stream_hll_registers(
     checkpoint_dir: str,
     col: str,
     p: int = DEFAULT_P,
-    base_id: int = HLL_STREAM_ID_BASE,
 ):
     """Start an availableNow stream folding each micro-batch's values of
     ``col`` into the persisted HLL register table at ``catalog_root``.
@@ -63,82 +65,8 @@ def stream_hll_registers(
     stored table, one m-row rewrite commit. Nothing is ever proportional
     to the number of distinct keys.
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import hashlib
-
-        cat = SnapshotCatalog(batch_df.sparkSession, catalog_root)
-        delta = hll_registers(batch_df, col, p)
-        # content fingerprint (ADVICE r05): the batch's input-file set
-        # when file-backed; else the m-row-max delta registers (the batch
-        # already reduces to them — one O(2^p) collect, never the keys).
-        # batch_df.inputFiles() is [] inside foreachBatch (the micro-batch
-        # is an internal relation, not a file scan), so the file identity
-        # comes from per-row input_file_name() — a low-cardinality
-        # map-side-combined distinct, O(#batch files) driver rows
-        files = sorted(
-            r["_f"]
-            for r in batch_df.select(F.input_file_name().alias("_f"))
-            .distinct()
-            .collect()
-            if r["_f"]
-        )
-        if files:
-            fp = hashlib.md5("\n".join(files).encode()).hexdigest()
-        else:
-            regs = sorted((r["register"], r["rank"]) for r in delta.collect())
-            fp = hashlib.md5(repr(regs).encode()).hexdigest()
-        # crash replays re-deliver one of the most recent commits, so the
-        # (batch, fp) dedup check walks a BOUNDED lineage suffix — the
-        # unbounded walk was O(#snapshots) manifest reads per batch,
-        # O(N²) over the stream (the frequency.py fix, ADVICE r06, applied
-        # to this sink too).  Missing an OLDER fp hit is harmless here:
-        # HLL max-merge is idempotent, so re-folding replayed content is a
-        # no-op by algebra, not by dedup.
-        if any(
-            s.counters.get("hll_stream_batch") == batch_id
-            and s.counters.get("hll_batch_fp") == fp
-            for s in cat.lineage(limit=16)
-        ):
-            return  # true replay (same batch, same CONTENT): durably done
-        sid = base_id + batch_id
-        # committed-id SET from one directory listing, no manifest reads;
-        # the reachability walk runs only on an actual collision
-        on_disk = cat.committed_snapshot_ids_on_disk()
-        if sid in on_disk:
-            reachable = {s.snapshot_id for s in cat.lineage()}
-            if sid in reachable:
-                # reused batchId with NEW content — a replaced checkpoint
-                # re-batched history + fresh files as batch 0. Fold under
-                # the next free id: max-merge makes re-folding the old
-                # subset a no-op while the new files' values land.
-                sid = max(on_disk | reachable) + 1
-            else:
-                os.remove(
-                    os.path.join(catalog_root, "manifests", f"snap-{sid}.json")
-                )  # orphan from a crash mid-commit
-        try:
-            prev = cat.read_table(REGISTER_TABLE)
-        except (KeyError, FileNotFoundError):  # first batch: no table yet
-            merged = delta
-        else:
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("register")
-                .agg(F.max("rank").alias("rank"))
-            )
-        cat.commit(
-            sid,
-            tables={REGISTER_TABLE: merged},  # m-row-max rewrite
-            counters={"hll_stream_batch": batch_id, "hll_batch_fp": fp},
-            output_partitions=1,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return exactly_once_stream(
+        stream, catalog_root, REGISTER_TABLE, checkpoint_dir, hll_fold(col, p)
     )
 
 

@@ -6,32 +6,12 @@ universe (operators/cms.py is the batch algebra; this module is its
 stream-side end-to-end proof, the frequency sibling of
 streaming/cardinality.py).
 
-Exactly-once is HARDER here than for the HLL sink: CMS merge is
+Exactly-once matters more here than for the HLL sink: CMS merge is
 cell-wise ADDITION, which is commutative and associative but NOT
-idempotent — re-folding a replayed batch double-counts, where the HLL's
-max-merge shrugged it off. So the sink keeps a FOLDED-FILE LEDGER
-(``cms_folded_files``, one row per input file ever folded) in the same
-SnapshotCatalog as the cells, committed atomically with them:
-
-- per batch, only files NOT on the ledger are folded (row filter on
-  ``input_file_name()`` — executor-side, no data collect);
-- a crash between sink-commit and checkpoint-write replays the batch,
-  finds every file on the ledger, and skips — no double count;
-- a REPLACED checkpoint with new source files re-batches everything as
-  batch 0; the ledger filter folds exactly the new files' rows. This is
-  the scenario where batchId-keyed dedup silently loses data (HLL sink,
-  ADVICE r05) and where content-keyed re-folding would DOUBLE-COUNT for
-  a sum-merge — the ledger handles both.
-
-The ledger is metadata-scale state: O(#input files), the same order as
-the streaming source's own file index, never O(rows) or O(keys) — and
-each batch APPENDS its delta (the Iceberg append chain), so a commit
-writes O(batch files), not O(all files ever). For a
-non-file-backed source (rate, socket, memory) there is no file identity,
-so the sink falls back to (batchId, delta-content-fingerprint) dedup:
-exact for crash replays (identical content → skip), documented
-at-least-once only in the replaced-checkpoint-with-overlapping-new-data
-corner a file identity would disambiguate.
+idempotent, so re-folding a replayed batch would double-count where the
+HLL's max-merge shrugs it off. The shared key-ledger protocol of
+streaming/catalog_sink.py (ledger ``cms_cells_folded``) folds each input
+file, or each non-file batch's content, exactly once.
 
 Stream ≡ batch equivalence is pinned in tests/test_streaming.py: the
 folded cell table is IDENTICAL to one batch ``cms_table`` over the union
@@ -40,18 +20,28 @@ of all input files, and estimates are overcounts-only vs exact.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.cms import DEFAULT_DEPTH, DEFAULT_WIDTH, cms_lookup, cms_table
 from ..sources.tables import SnapshotCatalog
+from .catalog_sink import exactly_once_stream, merged_with
 
-CMS_STREAM_ID_BASE = 2_200_000_000
 CELLS_TABLE = "cms_cells"
-FOLDED_TABLE = "cms_folded_files"
+
+
+def cms_fold(col: str, depth: int = DEFAULT_DEPTH, width: int = DEFAULT_WIDTH):
+    """Fold of the cell sink: sketch only the new rows, then sum-merge them
+    into the persisted cell table (a depth·width-bounded rewrite)."""
+
+    def fold(cat: SnapshotCatalog, rows: DataFrame):
+        delta = cms_table(rows, col, depth, width)
+        merged = merged_with(
+            cat, CELLS_TABLE, delta, ["row", "col"], F.sum("cnt").alias("cnt")
+        )
+        return {CELLS_TABLE: merged}, {}
+
+    return fold
 
 
 def stream_cms_cells(
@@ -61,7 +51,6 @@ def stream_cms_cells(
     col: str,
     depth: int = DEFAULT_DEPTH,
     width: int = DEFAULT_WIDTH,
-    base_id: int = CMS_STREAM_ID_BASE,
 ):
     """Start an availableNow stream folding each micro-batch's values of
     ``col`` into the persisted CMS cell table at ``catalog_root``.
@@ -73,111 +62,8 @@ def stream_cms_cells(
     merge against a depth·width-max stored table, one bounded rewrite
     commit. Nothing is ever proportional to the number of distinct keys.
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cat = SnapshotCatalog(spark, catalog_root)
-        # batch_df.inputFiles() is [] inside foreachBatch (the micro-batch
-        # is an internal relation, not a file scan) — per-row
-        # input_file_name() is the identity that actually survives, and a
-        # distinct over it is a low-cardinality map-side-combined agg
-        with_f = batch_df.withColumn("_cms_file", F.input_file_name())
-        files = sorted(
-            r["_cms_file"]
-            for r in with_f.select("_cms_file").distinct().collect()
-        )  # O(#batch files) driver rows — file lists, never data rows
-        folded_update = None
-        if files and all(files):
-            try:
-                ledger = cat.read_table(FOLDED_TABLE)
-            except (KeyError, FileNotFoundError):
-                ledger = spark.createDataFrame([], "file string")
-            batch_files = spark.createDataFrame([(f,) for f in files], "file string")
-            new_files = sorted(
-                r["file"]
-                for r in batch_files.join(
-                    F.broadcast(ledger), "file", "left_anti"
-                ).collect()
-            )
-            if not new_files:
-                return  # replay of durably-folded files: skip, no commit
-            delta = cms_table(
-                with_f.where(F.col("_cms_file").isin(new_files)),
-                col,
-                depth,
-                width,
-            )
-            # APPEND the batch's new files, never rewrite the ledger: a
-            # full rewrite is O(total files) per commit — O(N²·F) over a
-            # stream's lifetime — while the append chain is O(batch)
-            folded_update = spark.createDataFrame(
-                [(f,) for f in new_files], "file string"
-            )
-            fp = hashlib.md5("\n".join(new_files).encode()).hexdigest()
-        else:
-            # no file identity: dedup on the delta's own content.  A true
-            # crash replay re-delivers one of the most recent commits, so
-            # the (batch, fp) check walks a BOUNDED lineage suffix — the
-            # unbounded walk here was O(#snapshots) manifest reads per
-            # batch, O(N²) over the stream's lifetime (ADVICE r06); the
-            # replaced-checkpoint-with-overlapping-data corner this bound
-            # re-opens was already documented at-least-once for non-file
-            # sources (module doc).
-            delta = cms_table(batch_df, col, depth, width)
-            cells = sorted(
-                (r["row"], r["col"], r["cnt"]) for r in delta.collect()
-            )  # O(depth·width) max
-            fp = hashlib.md5(repr(cells).encode()).hexdigest()
-            if any(
-                s.counters.get("cms_stream_batch") == batch_id
-                and s.counters.get("cms_batch_fp") == fp
-                for s in cat.lineage(limit=16)
-            ):
-                return  # true replay (same batch, same content): durably done
-
-        # sid allocation needs only the committed-id SET: one directory
-        # listing (no manifest reads) instead of a full lineage walk per
-        # batch (ADVICE r06).  The expensive reachability walk now runs
-        # only on an actual id collision (replay/crash), never steady-state.
-        on_disk = cat.committed_snapshot_ids_on_disk()
-        sid = base_id + batch_id
-        if sid in on_disk:
-            reachable = {s.snapshot_id for s in cat.lineage()}
-            if sid in reachable:
-                # reused batchId (replaced checkpoint) — the ledger already
-                # confined the delta to genuinely-new files; commit under
-                # the next free id so lineage stays append-only
-                sid = max(on_disk | reachable) + 1
-            else:
-                # manifest present but unreachable: orphan from a crash
-                # mid-commit
-                os.remove(
-                    os.path.join(catalog_root, "manifests", f"snap-{sid}.json")
-                )
-        try:
-            prev = cat.read_table(CELLS_TABLE)
-        except (KeyError, FileNotFoundError):  # first batch: no table yet
-            merged = delta
-        else:
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("row", "col")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        appends = {FOLDED_TABLE: folded_update} if folded_update is not None else None
-        cat.commit(
-            sid,
-            tables={CELLS_TABLE: merged},  # depth·width-bounded rewrite
-            appends=appends,  # ledger delta: O(batch files), Iceberg-append
-            counters={"cms_stream_batch": batch_id, "cms_batch_fp": fp},
-            output_partitions=1,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return exactly_once_stream(
+        stream, catalog_root, CELLS_TABLE, checkpoint_dir, cms_fold(col, depth, width)
     )
 
 

@@ -13,9 +13,19 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from news_crawler_slm_spark.crawl.rounds import build_round, init_state, synthetic_fetcher
 from news_crawler_slm_spark.crawl.semantics import CrawlParams
 from news_crawler_slm_spark.sources.synthetic_web import WebScale, web_dataframes
+
+
+@pytest.fixture(autouse=True)
+def _clear_cache(spark):
+    """Drop what a test persisted even when it fails, so the next test's
+    scan counts never read a leftover cache."""
+    yield
+    spark.catalog.clearCache()
 
 
 def _round_plans(spark):
@@ -120,7 +130,6 @@ def test_keeper_rules_are_censuses_not_hash_windows(spark):
         assert "Window" not in _plan(df), name
         n = _count_file_scans(df._jdf.queryExecution().executedPlan())
         assert n <= 1, f"{name}: {n} per-execution scans"
-    spark.catalog.clearCache()
 
 
 def test_ann_lsh_band_table_is_persisted_and_spread(spark):
@@ -133,7 +142,6 @@ def test_ann_lsh_band_table_is_persisted_and_spread(spark):
     df = REGISTRY["ann_lsh_topk"][0](spark, "/root/testdata/sf0.001")
     n = _count_file_scans(df._jdf.queryExecution().executedPlan())
     assert n <= 1, f"ann_lsh_topk: {n} per-execution scans"
-    spark.catalog.clearCache()
 
 
 def test_tfidf_search_scans_the_corpus_once(spark):
@@ -148,7 +156,6 @@ def test_tfidf_search_scans_the_corpus_once(spark):
     df = REGISTRY["tfidf_search"][0](spark, "/root/testdata/sf0.001")
     assert _count_file_scans(df._jdf.queryExecution().executedPlan()) <= 2
     assert "Window" not in _plan(df)
-    spark.catalog.clearCache()
 
 
 def test_bm25_search_prunes_before_shuffle_and_scans_twice(spark):
@@ -167,7 +174,6 @@ def test_bm25_search_prunes_before_shuffle_and_scans_twice(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # TakeOrdered top-k, never a global sort
     assert "TakeOrderedAndProject" in plan
-    spark.catalog.clearCache()
 
 
 def test_doc_fingerprints_is_shuffle_free(spark):
@@ -397,4 +403,3 @@ def test_corpus_scan_budgets(spark):
         df = REGISTRY[name][0](spark, "/root/testdata/sf0.001")
         n = _count_file_scans(df._jdf.queryExecution().executedPlan())
         assert n <= budget, f"{name}: {n} per-execution scans > budget {budget}"
-    spark.catalog.clearCache()

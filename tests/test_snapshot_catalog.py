@@ -327,17 +327,3 @@ def test_ks_statistic_guards_empty_side(spark):
     with pytest.raises(Exception, match="non-empty"):
         frame.collect()
 
-
-def test_committed_ids_on_disk_and_bounded_lineage(spark, tmp_path):
-    """The streaming sinks' per-batch id allocation reads ONE directory
-    listing (committed_snapshot_ids_on_disk) and the replay-dedup check a
-    BOUNDED lineage suffix (lineage(limit=N)) — pin that both agree with
-    the full manifest walk."""
-    cat = SnapshotCatalog(spark, str(tmp_path / "ids"))
-    for sid in (5, 9, 11):
-        cat.commit(sid, tables={"t": spark.createDataFrame([(sid,)], "x long")})
-    assert cat.committed_snapshot_ids_on_disk() == {5, 9, 11}
-    full = [s.snapshot_id for s in cat.lineage()]
-    assert full == [11, 9, 5]
-    assert [s.snapshot_id for s in cat.lineage(limit=2)] == [11, 9]
-    assert [s.snapshot_id for s in cat.lineage(limit=0)] == []

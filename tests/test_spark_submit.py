@@ -1,8 +1,8 @@
-"""The north rule's packaging claim, executed literally: `spark-submit
---py-files dist/news_crawler_slm_spark.zip scripts/crawl_job.py` in a fresh
-JVM with the repo root NOT on sys.path — the job must import the engine
-from the shipped zip alone, run a real crawl, and resume from the
-committed catalog on re-submit."""
+"""The north rule's packaging claim, executed literally: build the
+--py-files zip with scripts/make_pyfiles.py, then `spark-submit --py-files
+<zip> scripts/crawl_job.py` in a fresh JVM with the repo root NOT on
+sys.path — the job must import the engine from the shipped zip alone, run
+a real crawl, and resume from the committed catalog on re-submit."""
 
 from __future__ import annotations
 
@@ -13,11 +13,11 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ZIP = os.path.join(REPO, "dist", "news_crawler_slm_spark.zip")
+MAKE = os.path.join(REPO, "scripts", "make_pyfiles.py")
 JOB = os.path.join(REPO, "scripts", "crawl_job.py")
 
 
-def _submit(catalog: str, rounds: int) -> dict:
+def _submit(zip_path: str, catalog: str, rounds: int) -> dict:
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
     proc = subprocess.run(
@@ -25,7 +25,7 @@ def _submit(catalog: str, rounds: int) -> dict:
             "spark-submit",
             "--master", "local[4]",
             "--conf", "spark.sql.shuffle.partitions=8",
-            "--py-files", ZIP,
+            "--py-files", zip_path,
             JOB,
             "--catalog", catalog,
             "--rounds", str(rounds),
@@ -44,8 +44,10 @@ def _submit(catalog: str, rounds: int) -> dict:
 
 
 def test_spark_submit_pyfiles_runs_and_resumes(tmp_path):
-    # the shipped zip must carry every engine module (stale-zip guard)
-    with zipfile.ZipFile(ZIP) as z:
+    zip_path = str(tmp_path / "news_crawler_slm_spark.zip")
+    subprocess.run([sys.executable, MAKE, zip_path], check=True)
+    # the shipped zip must carry every engine module
+    with zipfile.ZipFile(zip_path) as z:
         names = set(z.namelist())
     import pathlib
 
@@ -55,13 +57,13 @@ def test_spark_submit_pyfiles_runs_and_resumes(tmp_path):
         for p in src.rglob("*.py")
         if str(p.relative_to(REPO)) not in names
     ]
-    assert not missing, f"dist zip stale, missing: {missing}"
+    assert not missing, f"zip is missing: {missing}"
 
     catalog = str(tmp_path / "cat")
-    first = _submit(catalog, rounds=2)
+    first = _submit(zip_path, catalog, rounds=2)
     assert first["rounds_run"] == 2 and first["fetched"] > 0
 
     # re-submit against the same catalog: exactly-once resume, no refetch
-    second = _submit(catalog, rounds=1)
+    second = _submit(zip_path, catalog, rounds=1)
     assert second["final_round"] == first["final_round"] + 1
     assert second["rounds_run"] == 1

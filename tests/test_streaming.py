@@ -383,9 +383,10 @@ def test_sliding_token_trends_match_batch_twin(spark, tmp_path):
 
 def test_stream_to_catalog_exactly_once(spark, tmp_path):
     """foreachBatch idempotent sink: new files append exactly once across
-    restarts, a re-run with NOTHING new commits nothing, and even a fresh
-    checkpoint (batch ids restarting at 0) cannot double-append — the
-    snapshot-id dedup catches the replay."""
+    restarts, a re-run with NOTHING new commits nothing, a fresh checkpoint
+    (batch ids restarting at 0) cannot double-append, and a fresh
+    checkpoint over history plus a new file appends exactly the new rows —
+    the key ledger, not the batch id, decides what is new."""
     from news_crawler_slm_spark.sources.tables import SnapshotCatalog
     from news_crawler_slm_spark.streaming.catalog_sink import stream_to_catalog
 
@@ -415,18 +416,32 @@ def test_stream_to_catalog_exactly_once(spark, tmp_path):
     assert cat.read_table("pages_raw").count() == len(_BATCH1) + len(_BATCH2)
 
     # fresh checkpoint: the file source replays EVERYTHING as batch 0, but
-    # snapshot base+0 already exists on the lineage -> skipped, no dupes
+    # every file is on the ledger -> nothing committed, no dupes
+    before = cat.current_snapshot_id()
     ckpt2 = str(tmp_path / "ckpt2")
     stream_to_catalog(
         pages_stream(spark, src).drop("html"), root, "pages_raw", ckpt2
     ).awaitTermination()
     assert cat.read_table("pages_raw").count() == len(_BATCH1) + len(_BATCH2)
+    assert cat.current_snapshot_id() == before
+
+    # fresh checkpoint WITH a new file: batch 0 re-batches history plus the
+    # new file under a reused batch id; only the new file's rows append
+    batch3 = [("https://d/p1", _ts(3, 0), None, "quatro", "pt", "D", 7)]
+    _write_pages(spark, src, batch3)
+    ckpt3 = str(tmp_path / "ckpt3")
+    stream_to_catalog(
+        pages_stream(spark, src).drop("html"), root, "pages_raw", ckpt3
+    ).awaitTermination()
+    got = sorted(r.position for r in cat.read_table("pages_raw").collect())
+    assert got == sorted(r[-1] for r in _BATCH1 + _BATCH2 + batch3)
 
 
 def test_stream_to_catalog_orphan_manifest_recovery(spark, tmp_path):
     """A manifest written without the CURRENT swap (crash window) must be
-    redone, not skipped: simulate by writing an orphan manifest for the
-    batch id the stream is about to use."""
+    redone, not skipped: simulate by writing an orphan manifest at the
+    first stream snapshot id. The batch's keys are not on the ledger, so
+    it folds; the orphan's id is never reused and never reachable."""
     import json
     import os
 
@@ -441,10 +456,9 @@ def test_stream_to_catalog_orphan_manifest_recovery(spark, tmp_path):
     _write_pages(spark, src, _BATCH1)
 
     cat = SnapshotCatalog(spark, root)
-    orphan = Snapshot(STREAM_ID_BASE, None, {"pages_raw": []}, {}, {"orphan": 1})
-    with open(
-        os.path.join(root, "manifests", f"snap-{STREAM_ID_BASE}.json"), "w"
-    ) as f:
+    sid = cat.next_snapshot_id(floor=STREAM_ID_BASE)
+    orphan = Snapshot(sid, None, {"pages_raw": []}, {}, {"orphan": 1})
+    with open(os.path.join(root, "manifests", f"snap-{sid}.json"), "w") as f:
         f.write(orphan.to_json())
 
     stream_to_catalog(
@@ -452,7 +466,7 @@ def test_stream_to_catalog_orphan_manifest_recovery(spark, tmp_path):
         str(tmp_path / "ckpt"),
     ).awaitTermination()
     assert cat.read_table("pages_raw").count() == len(_BATCH1)
-    assert cat.snapshot(STREAM_ID_BASE).counters.get("orphan") is None
+    assert not any("orphan" in s.counters for s in cat.lineage())
 
 
 def test_streaming_hll_registers_equal_batch_sketch(spark, tmp_path):
@@ -462,7 +476,7 @@ def test_streaming_hll_registers_equal_batch_sketch(spark, tmp_path):
     the union — the end-to-end proof of the sketch's merge algebra — and
     the estimate must track the exact distinct-url count. A re-run with
     nothing new commits nothing; a replay from a fresh checkpoint cannot
-    corrupt the registers (max-merge + snapshot-id dedup)."""
+    corrupt the registers (max-merge + key-ledger dedup)."""
     from news_crawler_slm_spark.operators.hll import hll_estimate, hll_registers
     from news_crawler_slm_spark.sources.tables import SnapshotCatalog
     from news_crawler_slm_spark.streaming.cardinality import (
@@ -506,23 +520,22 @@ def test_streaming_hll_registers_equal_batch_sketch(spark, tmp_path):
     assert cat.current_snapshot_id() == before
 
     # fresh checkpoint, SAME files: replays everything as batch 0 whose
-    # (batchId, content-fingerprint) pair is already on the lineage ->
-    # skipped, registers unchanged
+    # files are all on the ledger -> skipped, registers unchanged
     ckpt2 = str(tmp_path / "hll_ckpt2")
     stream_hll_registers(
         pages_stream(spark, src).drop("html"), root, ckpt2, "url"
     ).awaitTermination()
+    assert cat.current_snapshot_id() == before
     got2 = {
         (r["register"], r["rank"])
         for r in cat.read_table(REGISTER_TABLE).collect()
     }
     assert got2 == want
 
-    # fresh checkpoint WITH new files (ADVICE r05): batch 0 re-batches
-    # history + the new file — same batchId, DIFFERENT content. batchId-only
-    # dedup silently skipped this and lost the new urls forever; the
-    # content-keyed sink folds it (max-merge makes re-folding the old
-    # subset a no-op) so the registers equal the batch sketch over ALL rows
+    # fresh checkpoint WITH new files: batch 0 re-batches history + the new
+    # file — same batchId, DIFFERENT content. batchId-only dedup silently
+    # skipped this and lost the new urls forever; the ledger folds the new
+    # file, so the registers equal the batch sketch over ALL rows
     batch3 = [
         ("https://d/p1", _ts(3, 0), None, "quatro", "pt", "D", 7),
         ("https://d/p2", _ts(3, 5), None, "cinque", "it", "D", 8),
@@ -554,8 +567,8 @@ def test_streaming_cms_cells_equal_batch_sketch(spark, tmp_path):
     Because cell merge is ADDITION (not idempotent like HLL max), the
     dedup bar is higher: a drained re-run commits nothing, a fresh
     checkpoint over the same files folds nothing, and a fresh checkpoint
-    WITH new files folds exactly the new files' rows (the folded-file
-    ledger — re-folding history would double-count every cell)."""
+    WITH new files folds exactly the new files' rows (the key ledger —
+    re-folding history would double-count every cell)."""
     from news_crawler_slm_spark.operators.cms import cms_table
     from news_crawler_slm_spark.sources.tables import SnapshotCatalog
     from news_crawler_slm_spark.streaming.frequency import (
@@ -599,8 +612,8 @@ def test_streaming_cms_cells_equal_batch_sketch(spark, tmp_path):
     assert cat.current_snapshot_id() == before
 
     # fresh checkpoint, SAME files: batch 0 re-batches all of history —
-    # every file is on the ledger, so the sink folds nothing (a content-
-    # keyed HLL-style re-fold here would DOUBLE every cell count)
+    # every file is on the ledger, so the sink folds nothing (a re-fold
+    # here would DOUBLE every cell count)
     ckpt2 = str(tmp_path / "cms_ckpt2")
     stream_cms_cells(pages_stream(spark, src).drop("html"), root, ckpt2, "url").awaitTermination()
     assert cells(cat.read_table(CELLS_TABLE)) == want
@@ -617,3 +630,36 @@ def test_streaming_cms_cells_equal_batch_sketch(spark, tmp_path):
     assert cells(cat.read_table(CELLS_TABLE)) == cells(cms_table(all_rows, "url"))
     got3 = {r["url"]: r["estimate"] for r in current_counts(spark, root, items, "url").collect()}
     assert got3["https://a/p1"] == 4
+
+
+def test_cms_fold_skips_old_non_file_replay(spark, tmp_path):
+    """In-memory batches have no input file, so the ledger key is the
+    batch's (id, row count, content fingerprint). A replay of batch 0 after
+    19 later commits must still fold nothing: the whole ledger decides,
+    not a recent window of snapshots."""
+    from news_crawler_slm_spark.operators.cms import cms_table
+    from news_crawler_slm_spark.sources.tables import SnapshotCatalog
+    from news_crawler_slm_spark.streaming.catalog_sink import exactly_once_batch
+    from news_crawler_slm_spark.streaming.frequency import CELLS_TABLE, cms_fold
+
+    root = str(tmp_path / "cms_mem")
+    run = exactly_once_batch(root, CELLS_TABLE, cms_fold("url"))
+
+    def batch(i):  # built on the JVM: no Python worker round trip per job
+        urls = F.array(F.lit(f"https://m/{i}"), F.lit("https://m/common"))
+        return spark.range(1).select(F.explode(urls).alias("url"))
+
+    def cells(df):
+        return {(r["row"], r["col"]): r["cnt"] for r in df.collect()}
+
+    for i in range(20):
+        run(batch(i), i)
+    cat = SnapshotCatalog(spark, root)
+    want = [(f"https://m/{i}",) for i in range(20)] + [("https://m/common",)] * 20
+    folded = cells(cat.read_table(CELLS_TABLE))
+    assert folded == cells(cms_table(spark.createDataFrame(want, "url string"), "url"))
+
+    before = cat.current_snapshot_id()
+    run(batch(0), 0)
+    assert cat.current_snapshot_id() == before
+    assert cells(cat.read_table(CELLS_TABLE)) == folded
