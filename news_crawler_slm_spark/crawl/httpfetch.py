@@ -40,10 +40,11 @@ actually fetched over HTTP:
   this architecture, exactly the fields the synthetic backend's web table
   join provides, so engine state (crawl log, seen, pages) is
   fetcher-implementation-independent (asserted in tests/test_crawl.py).
-
-Use ``params.cache_fetch=True`` with this fetcher: a live fetch is not
-idempotent wall-clock-wise, and the persisted-once mode guarantees one GET
-per popped URL per round (rounds.py:build_round docstring).
+- **One GET per popped URL.** The round loop may evaluate the fetch plan
+  twice (rounds.py:build_round docstring), and a live GET is not a pure
+  function of its input, so the fetcher returns its output persisted
+  memory+disk: the first action runs the requests, the second reads the
+  persisted rows, and the round loop unpersists them at commit.
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ from __future__ import annotations
 import json
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -79,7 +81,8 @@ def http_fetcher(
     """Build a rounds.Fetcher that GETs each popped URL via ``gateway``
     (``http://host:port`` — no trailing slash). ``crawl_delays`` maps host ->
     seconds between consecutive requests to that host (missing hosts use
-    DEFAULT_CRAWL_DELAY); pass scaled-down values in tests.
+    DEFAULT_CRAWL_DELAY); pass scaled-down values in tests. The frame a
+    fetch returns is persisted; a caller other than run_crawl unpersists it.
 
     ``validators`` (optional): a (url, etag[, last_modified]) DataFrame of
     entity validators from the previous crawl of each url — the shape
@@ -288,6 +291,10 @@ def http_fetcher(
         # politeness budget), so this shuffle moves URLs + metadata only —
         # html never shuffles, it is born in the fetch task and consumed by
         # the downstream Arrow extract in the same partitions
-        return popped.repartition("host").mapInPandas(run, schema=out_schema)
+        return (
+            popped.repartition("host")
+            .mapInPandas(run, schema=out_schema)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
     return fetch

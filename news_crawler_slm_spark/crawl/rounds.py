@@ -45,6 +45,10 @@ from .frontier import (
 )
 from .semantics import CrawlParams
 
+# A fetcher maps the popped batch to the same rows plus (html, out_links,
+# fetch_ok, lang, publisher). build_round may evaluate its plan twice per
+# round, so a fetcher with side effects (a live HTTP GET) returns its output
+# persisted; the round loop unpersists it when the round commits.
 Fetcher = Callable[[DataFrame], DataFrame]
 
 
@@ -112,6 +116,9 @@ class RoundDeltas:
     seen_delta: DataFrame
     pages_delta: DataFrame
     log_delta: DataFrame
+    # the fetcher's output these deltas read; a fetcher may return it
+    # persisted, so the caller unpersists it once the round commits
+    fetched: DataFrame
     host_delays: DataFrame | None = None  # full rewrite (adaptive politeness)
     # append: (round, source_url, target_url) per redirect observed this
     # round — the provenance the crawl_log's bare "redirected" status
@@ -147,8 +154,8 @@ def build_round(
     bloom: BloomStore | None = None,
 ) -> tuple[RoundDeltas, DataFrame, DataFrame, int, float]:
     """Assemble one round's plan. Returns (deltas, popped, fetched_slim,
-    n_popped, pop_latency_s); popped/fetched_slim are cached and must be
-    unpersisted by the caller.
+    n_popped, pop_latency_s); popped/fetched_slim are cached, and like
+    deltas.fetched must be unpersisted by the caller.
 
     The pop is materialized HERE (cache + count): the count is the round's
     stop condition AND the measured frontier-pop latency, and knowing the
@@ -156,17 +163,15 @@ def build_round(
     implementation (single window over the cached rows at test/bench sizes,
     distributed rank at 10^6-page rounds — frontier.py:SEQ_RANK_THRESHOLD).
 
-    Memory shape (default, params.cache_fetch=False): only an html-FREE slim
-    projection of the fetch result is cached (log/discovery/counters reuse
-    it). The heavy html column streams straight from the fetch stage into
-    the Arrow clean_html UDF exactly once, at pages-write time — at 100 TB,
-    caching or shuffling raw html per round would dominate everything. This
-    means the FETCH STAGE EXECUTES TWICE per round (slim action + pages
-    write), so the fetcher contract requires determinism/idempotence — true
-    for the synthetic fetcher and for polite re-GETs of static pages. For a
-    genuinely non-deterministic fetcher set params.cache_fetch=True: the
-    full result (html included) is persisted memory+disk, the fetcher runs
-    exactly once, and pages can never desynchronize from the crawl log."""
+    Memory shape: only an html-FREE slim projection of the fetch result is
+    cached (log/discovery/counters reuse it). The heavy html column streams
+    from the fetch stage into the Arrow clean_html UDF at pages-write time —
+    at 100 TB, caching or shuffling raw html per round would dominate
+    everything. So the fetch plan may be EVALUATED TWICE per round (slim
+    action + pages write): a re-scan for the synthetic fetcher, whose output
+    is a pure function of its input. A fetcher with side effects persists
+    its own output (httpfetch.http_fetcher), so it runs once per round and
+    pages can never desynchronize from the crawl log."""
     rnd = state.round + 1
 
     popped_raw = pop_round_raw(
@@ -177,15 +182,7 @@ def build_round(
     pop_latency = time.monotonic() - t_pop
     popped = attach_seq(popped_raw, n_popped)
     fetched_full = fetcher(popped)
-    if params.cache_fetch:
-        from pyspark import StorageLevel
-
-        fetched_full = fetched_full.persist(StorageLevel.MEMORY_AND_DISK)
-        fetched_slim = fetched_full.drop("html")
-        cache_handle = fetched_full
-    else:
-        fetched_slim = fetched_full.drop("html").cache()
-        cache_handle = fetched_slim
+    fetched_slim = fetched_full.drop("html").cache()
     ok_slim = fetched_slim.where(F.col("fetch_ok"))
 
     # Conditional-revalidation channel (httpfetch.py validators): a fetcher
@@ -334,10 +331,11 @@ def build_round(
         seen_delta=popped_raw.select("bucket", "url_hash", "url"),
         pages_delta=pages_delta,
         log_delta=log_delta,
+        fetched=fetched_full,
         host_delays=delays_new,
         aliases_delta=aliases_delta,
     )
-    return deltas, popped_raw, cache_handle, n_popped, pop_latency
+    return deltas, popped_raw, fetched_slim, n_popped, pop_latency
 
 
 def run_crawl(
@@ -352,9 +350,7 @@ def run_crawl(
     max_rounds: int | None = None,
     output_partitions: int | None = 1,
     on_round: Callable[[int, dict, float, float], None] | None = None,
-    commit_parallelism: int = 2,
     compact_every: int | None = None,
-    compact_tables: tuple[str, ...] = ("seen", "pages", "crawl_log"),
     expire_keep: int | None = None,
 ) -> CrawlState:
     """Run (or resume) a crawl; one snapshot per round.
@@ -367,8 +363,8 @@ def run_crawl(
     ``output_partitions=1`` suits test-scale states; pass None at scale to
     keep natural partitioning.
 
-    ``compact_every=K`` rewrites each append-chain table in
-    ``compact_tables`` into a single data directory after every K-th round
+    ``compact_every=K`` rewrites each append-chain table (seen, pages,
+    crawl_log) into a single data directory after every K-th round
     (SnapshotCatalog.compact — maintenance snapshots in the reserved high
     id range, so a later resume's round ids can never collide). Without it
     a 10^4-round crawl accrues 10^4 delta dirs per chain and every
@@ -385,7 +381,7 @@ def run_crawl(
     across an expiry boundary equals an uninterrupted run
     (tests/test_snapshot_catalog.py).
     """
-    catalog = SnapshotCatalog(spark, catalog_root, commit_parallelism=commit_parallelism)
+    catalog = SnapshotCatalog(spark, catalog_root)
     bloom = (
         BloomStore(catalog_root, params, filter_kind=seen_filter)
         if use_bloom
@@ -424,8 +420,8 @@ def run_crawl(
         )
         rnd = state.round + 1
         if n_popped == 0:
-            popped.unpersist()
-            fetched_slim.unpersist()
+            for df in (fetched_slim, deltas.fetched, popped):
+                df.unpersist()
             break
 
         if bloom is not None:
@@ -514,10 +510,12 @@ def run_crawl(
             serial_first=("pages",),
         )
         counters = snap.counters
-        popped.unpersist()
-        fetched_slim.unpersist()
+        # dependents first: the slim cache reads the fetch frame, which
+        # reads the pop
+        for df in (fetched_slim, deltas.fetched, popped):
+            df.unpersist()
         if compact_every is not None and rnd % compact_every == 0:
-            for t in compact_tables:
+            for t in ("seen", "pages", "crawl_log"):
                 catalog.compact(
                     t,
                     output_partitions=output_partitions,

@@ -148,14 +148,6 @@ class CrawlParams:
     max_rounds: int = 100
     n_buckets: int = 8
     n_salts: int = 4
-    # False (default): the fetch stage may execute twice per round (once for
-    # log/counters/discovery via the html-free slim cache, once at
-    # pages-write time) — requires a DETERMINISTIC/idempotent fetcher, which
-    # the synthetic fetcher is. True: persist the full fetch result
-    # (memory+disk, html included) so a NON-deterministic fetcher (real
-    # HTTP) executes exactly once and pages can never desynchronize from the
-    # crawl log — at the cost of spilling raw html per round.
-    cache_fetch: bool = False
     # True: drop trap-shaped URLs (is_trap / frontier.is_trap_col) at seed
     # insert and link discovery. Default False so crawl ordering stays
     # bit-identical to the reference-equivalence simulator contract; turn

@@ -2,8 +2,8 @@
 
 No Iceberg/Delta jars exist in this sandbox (verified; no network), so the
 engine ships a thin snapshot layer with an Iceberg-shaped API: atomic
-snapshot commits, parent lineage, per-table row counts and user counters,
-time-travel reads by snapshot id. Swappable for real Iceberg on a cluster —
+snapshot commits, parent lineage, user counters, time-travel reads by
+snapshot id. Swappable for real Iceberg on a cluster —
 callers only touch :class:`SnapshotCatalog`.
 
 Reference analog: ``finished_publishers.txt`` + per-publisher files
@@ -38,13 +38,16 @@ from pyspark.sql import DataFrame, SparkSession
 # never collide with crawl-round snapshot ids (rounds are contiguous from 1).
 COMPACTION_ID_BASE = 1_000_000_000
 
+# Table writes after a commit's ``serial_first`` set run as up to this many
+# concurrent Spark jobs (SnapshotCatalog.commit).
+COMMIT_PARALLELISM = 2
+
 
 @dataclass
 class Snapshot:
     snapshot_id: int
     parent_id: int | None
     tables: dict[str, list[str]]  # table name -> ordered list of data paths
-    row_counts: dict[str, int]
     counters: dict[str, Any] = field(default_factory=dict)
     schemas: dict[str, str] = field(default_factory=dict)  # table -> schema json
 
@@ -54,7 +57,6 @@ class Snapshot:
                 "snapshot_id": self.snapshot_id,
                 "parent_id": self.parent_id,
                 "tables": self.tables,
-                "row_counts": self.row_counts,
                 "counters": self.counters,
                 "schemas": self.schemas,
             },
@@ -71,7 +73,6 @@ class Snapshot:
             snapshot_id=d["snapshot_id"],
             parent_id=d["parent_id"],
             tables=tables,
-            row_counts=d["row_counts"],
             counters=d.get("counters", {}),
             schemas=d.get("schemas", {}),
         )
@@ -80,12 +81,9 @@ class Snapshot:
 class SnapshotCatalog:
     """A directory of snapshots over a set of named tables."""
 
-    def __init__(
-        self, spark: SparkSession, root: str, commit_parallelism: int = 1
-    ) -> None:
+    def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root
-        self.commit_parallelism = commit_parallelism
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
@@ -254,7 +252,6 @@ class SnapshotCatalog:
         tables: dict[str, DataFrame] | None = None,
         appends: dict[str, DataFrame] | None = None,
         counters: dict[str, Any] | Any = None,
-        count_rows: bool = False,
         output_partitions: int | None = None,
         partition_by: dict[str, list[str]] | None = None,
         serial_first: tuple[str, ...] = (),
@@ -273,11 +270,9 @@ class SnapshotCatalog:
         counting action) while keeping them in the same atomic snapshot.
         ``output_partitions``: coalesce width for tiny test-scale states;
         leave None at scale.
-        ``count_rows``: row counts per table in the manifest cost one job
-        each — opt-in.
         ``serial_first``: table names whose writes run SERIALLY before the
-        rest; with ``commit_parallelism > 1`` the remaining writes then run
-        as concurrent Spark jobs. Shape for the crawl: the python-UDF-heavy
+        rest; the remaining writes then run as up to COMMIT_PARALLELISM
+        concurrent Spark jobs. Shape for the crawl: the python-UDF-heavy
         ``pages`` write gets the whole python worker pool to itself, then
         the small JVM-only state writes (frontier/seen/log/counters) overlap
         each other's stage gaps — concurrency where it helps, isolation
@@ -290,7 +285,6 @@ class SnapshotCatalog:
             {t: list(p) for t, p in parent_snap.tables.items()} if parent_snap else {}
         )
         schemas: dict[str, str] = dict(parent_snap.schemas) if parent_snap else {}
-        row_counts: dict[str, int] = {}
 
         def _write(name: str, df: DataFrame) -> str:
             path = os.path.join(self.root, "data", name, f"snap-{snapshot_id}")
@@ -306,27 +300,27 @@ class SnapshotCatalog:
             schemas[name] = df.schema.json()
             return path
 
-        # Table writes can be submitted as concurrent Spark jobs
-        # (self.commit_parallelism > 1) so independent writes overlap stage
-        # gaps — a win on a real cluster with per-node python worker pools.
-        # Measured on the single shared local JVM, concurrent python-UDF
-        # stages CONTEND (worker pool + memory bus) and serial is faster, so
-        # the default is 1. Failure of any write aborts the commit before
-        # the manifest swap — atomicity holds either way.
+        # Writes after ``serial_first`` run as concurrent Spark jobs so
+        # independent writes overlap each other's stage gaps. Python-UDF
+        # writes belong in ``serial_first``: on one shared local JVM,
+        # concurrent python stages contend for the worker pool. Failure of
+        # any write aborts the commit before the manifest swap — atomicity
+        # holds either way.
         from concurrent.futures import ThreadPoolExecutor
 
         jobs = [(name, df, False) for name, df in (tables or {}).items()] + [
             (name, df, True) for name, df in (appends or {}).items()
         ]
-        par = max(1, int(getattr(self, "commit_parallelism", 1)))
         if jobs:
             head = [j for j in jobs if j[0] in serial_first]
             rest = [j for j in jobs if j[0] not in serial_first]
             written = [(n, _write(n, df), ap) for n, df, ap in head]
-            if par == 1 or len(rest) <= 1:
+            if len(rest) <= 1:
                 written += [(n, _write(n, df), ap) for n, df, ap in rest]
             else:
-                with ThreadPoolExecutor(max_workers=min(par, len(rest))) as ex:
+                with ThreadPoolExecutor(
+                    max_workers=min(COMMIT_PARALLELISM, len(rest))
+                ) as ex:
                     written += list(
                         ex.map(lambda j: (j[0], _write(j[0], j[1]), j[2]), rest)
                     )
@@ -336,13 +330,9 @@ class SnapshotCatalog:
                 else:
                     paths[name] = [path]
 
-        if count_rows:
-            for name, plist in paths.items():
-                row_counts[name] = self.spark.read.parquet(*plist).count()
-
         if callable(counters):
             counters = counters()
-        snap = Snapshot(snapshot_id, parent, paths, row_counts, counters or {}, schemas)
+        snap = Snapshot(snapshot_id, parent, paths, counters or {}, schemas)
 
         manifest_dir = os.path.join(self.root, "manifests")
         fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")

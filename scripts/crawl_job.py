@@ -66,7 +66,7 @@ def main() -> int:
         default=None,
         help="HTTP gateway base url (http://host:port): fetch over HTTP via "
         "the mapInPandas fetcher (crawl/httpfetch.py) instead of the "
-        "synthetic join backend; implies cache_fetch (one GET per url)",
+        "synthetic join backend (one GET per url per round)",
     )
     ap.add_argument(
         "--revalidate",
@@ -158,8 +158,6 @@ def main() -> int:
 
     fetcher = synthetic_fetcher(web)
     if args.gateway:
-        import dataclasses
-
         from news_crawler_slm_spark.crawl.httpfetch import http_fetcher
         from news_crawler_slm_spark.crawl.rounds import live_pages
         from news_crawler_slm_spark.sources.tables import SnapshotCatalog
@@ -175,7 +173,6 @@ def main() -> int:
                 )
                 validators = lp.select(*vcols)
         fetcher = http_fetcher(args.gateway, validators=validators)
-        params = dataclasses.replace(params, cache_fetch=True)
 
     progress = []
 

@@ -2,7 +2,8 @@
 
 1. loopback-HTTP fetcher (keep-alive, retries, politeness pacing) commits
    the IDENTICAL state as the synthetic-join fetcher and the simulator;
-2. cache_fetch single-execution mode is result-invisible;
+2. the HTTP fetcher runs once per round: one GET per popped URL, and its
+   persisted output is released when the round commits;
 3. RFC 9110 conditional revalidation (If-None-Match / 304) round-trip,
    incl. change-rate freshness weighting;
 4. Retry-After server backoff paces the retry;
@@ -36,28 +37,6 @@ def sim_result(corpus):
     return simulate(corpus["seeds"], corpus["robots"], corpus["web"], PARAMS)
 
 
-def test_cache_fetch_mode_equivalent(spark, tmp_path, sim_result):
-    """params.cache_fetch=True (persist the full fetch result so a
-    non-deterministic fetcher would run exactly once) must produce the
-    identical crawl log, seen set and page bytes as the default
-    double-execution mode."""
-    dfs = web_dataframes(spark, SCALE)
-    fetcher = synthetic_fetcher(dfs["web"])
-    import dataclasses
-
-    params = dataclasses.replace(PARAMS, cache_fetch=True)
-    root = str(tmp_path / "cachefetch_cat")
-    run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, params)
-    catalog = SnapshotCatalog(spark, root)
-    assert _crawl_log(catalog) == sim_result.crawl_log
-    assert {r["url"] for r in catalog.read_table("seen").collect()} == sim_result.seen
-    got_pages = {
-        r["url"]: (r["text"], r["lang"], r["publisher"])
-        for r in catalog.read_table("pages").collect()
-    }
-    assert got_pages == sim_result.pages
-
-
 def test_http_fetcher_matches_simulator(spark, tmp_path, corpus, sim_result):
     """S2's REAL form: a full crawl through the loopback-HTTP mapInPandas
     fetcher (keep-alive connection reuse, per-row timeout, 503-retry,
@@ -66,8 +45,10 @@ def test_http_fetcher_matches_simulator(spark, tmp_path, corpus, sim_result):
     the sequential simulator — the engine's committed state is
     fetcher-implementation-independent. Also asserts the politeness spacing
     actually happened (server-side arrival gaps) and that the transient-
-    error retry path really ran (flaky URLs got a 503 first)."""
-    import dataclasses
+    error retry path really ran (flaky URLs got a 503 first). The fetch
+    runs once per round with default params: every popped URL's requests
+    are one fetch's worth, and no persisted RDD outlives the crawl."""
+    from collections import Counter
 
     from loopback_gateway import Gateway
 
@@ -83,10 +64,14 @@ def test_http_fetcher_matches_simulator(spark, tmp_path, corpus, sim_result):
         # pacing delays scaled 1/20 from the robots values so the test runs
         # in seconds; the BUDGET semantics (ordering) still use robots as-is
         delays = {r[0]: r[3] / 20.0 for r in corpus["robots"]}
-        fetcher = http_fetcher(gw.url, crawl_delays=delays, timeout_s=5.0, max_retries=2)
-        params = dataclasses.replace(PARAMS, cache_fetch=True)
+        max_retries = 2
+        fetcher = http_fetcher(
+            gw.url, crawl_delays=delays, timeout_s=5.0, max_retries=max_retries
+        )
         root = str(tmp_path / "http_cat")
-        run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, params)
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, PARAMS)
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
         catalog = SnapshotCatalog(spark, root)
 
         assert _crawl_log(catalog) == sim_result.crawl_log
@@ -113,15 +98,14 @@ def test_http_fetcher_matches_simulator(spark, tmp_path, corpus, sim_result):
             tight += sum(1 for g in gaps if g < 2.0)
         assert tight > 0  # intra-round pacing was actually exercised
 
-        # the retry path ran: each flaky URL was requested at least twice
-        from news_crawler_slm_spark.crawl.semantics import host_of, path_of
-
-        for u in flaky:
-            n = sum(
-                1 for h, _t, p in gw.request_log
-                if h == host_of(u) and p == path_of(u)
-            )
-            assert n >= 2, u
+        # one fetch per popped url: a fetched url took one GET, a flaky one
+        # a 503 then a 200, and a failed one (the gateway answers 503 for
+        # every request) 1 + max_retries GETs
+        expected = Counter({
+            u: 2 if u in flaky else 1 if st == "fetched" else 1 + max_retries
+            for _r, _s, _h, u, st in sim_result.crawl_log
+        })
+        assert Counter(f"https://{h}{p}" for h, _t, p in gw.request_log) == expected
     finally:
         gw.close()
 
@@ -187,8 +171,6 @@ def test_conditional_revalidation_roundtrip(spark, tmp_path, corpus, sim_result)
     mutated between crawls must come back 200 with fresh bytes and a new
     ETag. This is the TTL-recrawl fast path: most of a re-crawl costs a
     header exchange, not a body + extraction."""
-    import dataclasses
-
     from loopback_gateway import Gateway
 
     from news_crawler_slm_spark.crawl.httpfetch import http_fetcher
@@ -199,10 +181,9 @@ def test_conditional_revalidation_roundtrip(spark, tmp_path, corpus, sim_result)
     try:
         dfs = web_dataframes(spark, SCALE)
         delays = {r[0]: r[3] / 20.0 for r in corpus["robots"]}
-        params = dataclasses.replace(PARAMS, cache_fetch=True)
         root = str(tmp_path / "reval_cat")
         fetcher = http_fetcher(gw.url, crawl_delays=delays, timeout_s=5.0, max_retries=2)
-        run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, params)
+        run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, PARAMS)
         catalog = SnapshotCatalog(spark, root)
         rounds_run = sim_result.rounds_run
 
@@ -227,7 +208,7 @@ def test_conditional_revalidation_roundtrip(spark, tmp_path, corpus, sim_result)
             validators=validators,
         )
         run_crawl(
-            spark, root, dfs["seeds"], dfs["robots"], fetcher2, params, max_rounds=8
+            spark, root, dfs["seeds"], dfs["robots"], fetcher2, PARAMS, max_rounds=8
         )
 
         later = [
@@ -320,7 +301,9 @@ def test_retry_after_paces_the_retry(spark):
         popped = spark.createDataFrame(
             [("ra.example.com", url, 1)], "host string, url string, seq long"
         )
-        out = fetcher(popped).collect()
+        fetched = fetcher(popped)
+        out = fetched.collect()
+        fetched.unpersist()
         assert len(out) == 1 and out[0]["fetch_ok"]
         ts = [t for h, t, p in gw.request_log if p == path_of(url)]
         assert len(ts) == 2  # one 503, one 200
@@ -351,8 +334,6 @@ def test_if_modified_since_revalidation_roundtrip(spark, tmp_path):
     comes back 200 with fresh bytes; hosts WITH ETags keep using the
     strong validator (their conditional requests carry If-None-Match,
     never If-Modified-Since)."""
-    import dataclasses
-
     from loopback_gateway import Gateway
 
     from news_crawler_slm_spark.crawl.rounds import live_pages, retire_and_requeue
@@ -366,10 +347,9 @@ def test_if_modified_since_revalidation_roundtrip(spark, tmp_path):
     try:
         dfs = web_dataframes(spark, scale)
         delays = {r[0]: r[3] / 100.0 for r in corpus["robots"]}
-        params = dataclasses.replace(PARAMS, cache_fetch=True)
         root = str(tmp_path / "ims_cat")
         fetcher = http_fetcher(gw.url, crawl_delays=delays, timeout_s=5.0, max_retries=2)
-        state = run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, params)
+        state = run_crawl(spark, root, dfs["seeds"], dfs["robots"], fetcher, PARAMS)
         catalog = SnapshotCatalog(spark, root)
         rounds_run = state.round
 
@@ -396,7 +376,7 @@ def test_if_modified_since_revalidation_roundtrip(spark, tmp_path):
             validators=validators,
         )
         run_crawl(
-            spark, root, dfs["seeds"], dfs["robots"], fetcher2, params, max_rounds=8
+            spark, root, dfs["seeds"], dfs["robots"], fetcher2, PARAMS, max_rounds=8
         )
 
         later = [

@@ -171,8 +171,6 @@ def test_http_fetcher_redirects_match_simulator(spark, tmp_path, sim_full):
     host's politeness slot), and the committed crawl state is identical to
     the synthetic-join fetcher and the sequential simulator — redirect
     handling is fetcher-implementation-independent."""
-    import dataclasses
-
     from loopback_gateway import Gateway
 
     from news_crawler_slm_spark.crawl.httpfetch import http_fetcher
@@ -181,9 +179,8 @@ def test_http_fetcher_redirects_match_simulator(spark, tmp_path, sim_full):
     try:
         _web, seeds, robots = _frames(spark)
         fetcher = http_fetcher(gw.url, crawl_delays={}, timeout_s=5.0, max_retries=2)
-        params = dataclasses.replace(PARAMS, cache_fetch=True)
         root = str(tmp_path / "http_redirect_cat")
-        run_crawl(spark, root, seeds, robots, fetcher, params)
+        run_crawl(spark, root, seeds, robots, fetcher, PARAMS)
         catalog = SnapshotCatalog(spark, root)
 
         assert _crawl_log(catalog) == sim_full.crawl_log

@@ -457,7 +457,7 @@ def test_stream_to_catalog_orphan_manifest_recovery(spark, tmp_path):
 
     cat = SnapshotCatalog(spark, root)
     sid = cat.next_snapshot_id(floor=STREAM_ID_BASE)
-    orphan = Snapshot(sid, None, {"pages_raw": []}, {}, {"orphan": 1})
+    orphan = Snapshot(sid, None, {"pages_raw": []}, {"orphan": 1})
     with open(os.path.join(root, "manifests", f"snap-{sid}.json"), "w") as f:
         f.write(orphan.to_json())
 
