@@ -371,6 +371,7 @@ def bench_corpus_prep(spark) -> dict:
     from news_crawler_slm_spark.plans.corpus import corpus_from_crawl, current_pages
     from news_crawler_slm_spark.plans.pipeline import PreprocessParams
     from news_crawler_slm_spark.plans.training import TrainingPrepParams
+    from news_crawler_slm_spark.session import cache_scope
     from news_crawler_slm_spark.sources.synthetic_web import WebScale, web_dataframes
     from news_crawler_slm_spark.sources.tables import SnapshotCatalog
 
@@ -398,9 +399,10 @@ def bench_corpus_prep(spark) -> dict:
         pp = PreprocessParams(token_threshold=10**9, cap_n=10**9)
         tp = TrainingPrepParams(token_budget=4096, gate="composite")
         t0 = time.monotonic()
-        res = corpus_from_crawl(catalog, pp, tp)
-        packed = res.training.count()
-        wall = time.monotonic() - t0
+        with cache_scope():  # releases the pipeline's internal caches
+            res = corpus_from_crawl(catalog, pp, tp)
+            packed = res.training.count()
+            wall = time.monotonic() - t0
         return {
             "docs_in": docs_in,
             "packed_docs": packed,
@@ -410,7 +412,6 @@ def bench_corpus_prep(spark) -> dict:
         }
     finally:
         shutil.rmtree(corpus_dir, ignore_errors=True)
-        spark.catalog.clearCache()  # release the pipeline's internal persist
 
 
 def _drain_and_stop(spark) -> None:

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from ..functions import urls as U
 from ..operators.rank import with_global_rank
 from ..operators.topk import salted_top_k_per_group
+from ..session import scoped
 from . import semantics as SEM
 from .bloom import BloomFilter, CuckooFilter
 from .semantics import DEFAULT_CRAWL_DELAY, CrawlParams
@@ -627,10 +628,9 @@ def reprioritize_frontier_pagerank(
     blend joins the (nodes-sized) rank table to the frontier on url —
     co-keyed with the frontier's own url-keyed maintenance joins.
 
-    Cache contract: eager — the blended frontier is persisted and
+    Cache contract: eager — the blended frontier is ``scoped`` and
     materialized here, the PageRank cache is released before returning,
-    and the RETURNED frame is the single surviving cache (call
-    ``.unpersist()`` once the crawl adopts the new priorities).
+    and the RETURNED frame is the single surviving cache.
     """
     from ..operators.pagerank import MICRO, pagerank
 
@@ -641,8 +641,6 @@ def reprioritize_frontier_pagerank(
         .select("src", U.canonical_url(F.col("raw")).alias("dst"))
         .where(is_fetchable_col(F.col("dst")))
     )
-    from pyspark import StorageLevel
-
     ranks = pagerank(edges, iters=iters)
     n = ranks.agg(F.count("*").cast("double").alias("n_nodes"))
     boost = ranks.crossJoin(F.broadcast(n)).select(
@@ -661,9 +659,8 @@ def reprioritize_frontier_pagerank(
     )
     # cache contract (ADVICE r05): materialize the blended frontier, then
     # release the pagerank cache — this maintenance pass leaves exactly
-    # ONE persisted frame (the returned frontier, caller-unpersists when
-    # the crawl adopts it), mirroring pagerank()'s own contract
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE persisted frame, the returned frontier
+    out = scoped(out)
     out.count()
     ranks.unpersist()
     return out

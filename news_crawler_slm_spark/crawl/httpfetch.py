@@ -43,8 +43,9 @@ actually fetched over HTTP:
 - **One GET per popped URL.** The round loop may evaluate the fetch plan
   twice (rounds.py:build_round docstring), and a live GET is not a pure
   function of its input, so the fetcher returns its output persisted
-  memory+disk: the first action runs the requests, the second reads the
-  persisted rows, and the round loop unpersists them at commit.
+  memory+disk (``session.scoped``): the first action runs the requests, the
+  second reads the persisted rows, and the round's cache scope releases
+  them at commit.
 """
 
 from __future__ import annotations
@@ -52,10 +53,10 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..session import scoped
 from .semantics import DEFAULT_CRAWL_DELAY, host_of, path_of
 
 _ADDED_FIELDS = [
@@ -82,7 +83,8 @@ def http_fetcher(
     (``http://host:port`` — no trailing slash). ``crawl_delays`` maps host ->
     seconds between consecutive requests to that host (missing hosts use
     DEFAULT_CRAWL_DELAY); pass scaled-down values in tests. The frame a
-    fetch returns is persisted; a caller other than run_crawl unpersists it.
+    fetch returns is ``scoped`` (persisted, released by the open
+    ``cache_scope()``).
 
     ``validators`` (optional): a (url, etag[, last_modified]) DataFrame of
     entity validators from the previous crawl of each url — the shape
@@ -291,10 +293,6 @@ def http_fetcher(
         # politeness budget), so this shuffle moves URLs + metadata only —
         # html never shuffles, it is born in the fetch task and consumed by
         # the downstream Arrow extract in the same partitions
-        return (
-            popped.repartition("host")
-            .mapInPandas(run, schema=out_schema)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        return scoped(popped.repartition("host").mapInPandas(run, schema=out_schema))
 
     return fetch

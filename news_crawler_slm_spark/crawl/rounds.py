@@ -30,10 +30,12 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import clean_html_udf
+from ..session import cache_scope, scoped
 from ..sources.tables import SnapshotCatalog
 from .frontier import (
     BloomStore,
@@ -48,7 +50,7 @@ from .semantics import CrawlParams
 # A fetcher maps the popped batch to the same rows plus (html, out_links,
 # fetch_ok, lang, publisher). build_round may evaluate its plan twice per
 # round, so a fetcher with side effects (a live HTTP GET) returns its output
-# persisted; the round loop unpersists it when the round commits.
+# ``scoped``; the round's cache scope releases it when the round commits.
 Fetcher = Callable[[DataFrame], DataFrame]
 
 
@@ -116,9 +118,6 @@ class RoundDeltas:
     seen_delta: DataFrame
     pages_delta: DataFrame
     log_delta: DataFrame
-    # the fetcher's output these deltas read; a fetcher may return it
-    # persisted, so the caller unpersists it once the round commits
-    fetched: DataFrame
     host_delays: DataFrame | None = None  # full rewrite (adaptive politeness)
     # append: (round, source_url, target_url) per redirect observed this
     # round — the provenance the crawl_log's bare "redirected" status
@@ -154,8 +153,8 @@ def build_round(
     bloom: BloomStore | None = None,
 ) -> tuple[RoundDeltas, DataFrame, DataFrame, int, float]:
     """Assemble one round's plan. Returns (deltas, popped, fetched_slim,
-    n_popped, pop_latency_s); popped/fetched_slim are cached, and like
-    deltas.fetched must be unpersisted by the caller.
+    n_popped, pop_latency_s); popped/fetched_slim are ``scoped`` caches, so
+    build and consume a round inside one ``cache_scope()``.
 
     The pop is materialized HERE (cache + count): the count is the round's
     stop condition AND the measured frontier-pop latency, and knowing the
@@ -174,15 +173,16 @@ def build_round(
     pages can never desynchronize from the crawl log."""
     rnd = state.round + 1
 
-    popped_raw = pop_round_raw(
-        state.frontier, robots, state.host_counts, params, state.host_delays
-    ).cache()
+    popped_raw = scoped(
+        pop_round_raw(state.frontier, robots, state.host_counts, params, state.host_delays),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     t_pop = time.monotonic()
     n_popped = popped_raw.count()
     pop_latency = time.monotonic() - t_pop
     popped = attach_seq(popped_raw, n_popped)
     fetched_full = fetcher(popped)
-    fetched_slim = fetched_full.drop("html").cache()
+    fetched_slim = scoped(fetched_full.drop("html"), StorageLevel.MEMORY_AND_DISK_DESER)
     ok_slim = fetched_slim.where(F.col("fetch_ok"))
 
     # Conditional-revalidation channel (httpfetch.py validators): a fetcher
@@ -331,7 +331,6 @@ def build_round(
         seen_delta=popped_raw.select("bucket", "url_hash", "url"),
         pages_delta=pages_delta,
         log_delta=log_delta,
-        fetched=fetched_full,
         host_delays=delays_new,
         aliases_delta=aliases_delta,
     )
@@ -409,111 +408,109 @@ def run_crawl(
     rounds_left = max_rounds if max_rounds is not None else params.max_rounds - state.round
     for _ in range(max(0, rounds_left)):
         t_round = time.monotonic()
-        # build_round materializes the pop (cache + count, no fetch): the
-        # count is the stop condition, its duration the true frontier-pop
-        # latency, and the known size picks the seq implementation.
-        # fetched/failed counters ride the crawl_log write inside the
-        # commit via an Observation — no separate fetch-materializing
-        # counting action per round.
-        deltas, popped, fetched_slim, n_popped, pop_latency = build_round(
-            state, robots, fetcher, params, bloom
-        )
-        rnd = state.round + 1
-        if n_popped == 0:
-            for df in (fetched_slim, deltas.fetched, popped):
-                df.unpersist()
-            break
-
-        if bloom is not None:
-            bloom.update(deltas.seen_delta, state.round if state.round > 0 else None, rnd)
-
-        from pyspark.sql import Observation
-
-        obs = Observation(f"round-{rnd}")
-        log_observed = deltas.log_delta.observe(
-            obs,
-            F.count(F.when(F.col("status") == "fetched", 1)).alias("fetched"),
-            F.count(F.when(F.col("status") == "revalidated", 1)).alias(
-                "revalidated"
-            ),
-            F.count(F.when(F.col("status") == "redirected", 1)).alias(
-                "redirected"
-            ),
-            F.count("*").alias("n"),
-        )
-
-        def counters_fn() -> dict:
-            # evaluated by commit() AFTER the table writes (the crawl_log
-            # write fires the observation), BEFORE the manifest swap — so
-            # the counters land in the same atomic snapshot.
-            got = obs.get
-            return {
-                "round": rnd,
-                "popped": n_popped,
-                "fetched": int(got["fetched"]),
-                "revalidated": int(got["revalidated"]),
-                "redirected": int(got["redirected"]),
-                "failed": int(
-                    got["n"]
-                    - got["fetched"]
-                    - got["revalidated"]
-                    - got["redirected"]
-                ),
-            }
-
-        rewrite_tables = {
-            "frontier": deltas.frontier,
-            "host_counts": deltas.host_counts,
-        }
-        if deltas.host_delays is not None:
-            rewrite_tables["host_delays"] = deltas.host_delays
-        if params.host_hll_p is not None:
-            # per-host distinct-URL HLL riding the round commit: register
-            # rows for this round's popped urls (the exact seen-delta
-            # universe), max-merged into the committed table — idempotent,
-            # so crash/replay/resume cannot double-count; O(hosts x 2^p)
-            # rows total, never the url universe. Batch-equality contract:
-            # tests/test_hll.py::test_crawl_host_hll_matches_batch.
-            from ..operators.hll import hll_registers_by
-
-            new_regs = hll_registers_by(
-                popped.select("host", "url"), ["host"], "url", p=params.host_hll_p
+        # the round's caches (pop, a fetcher's own, slim) live until its
+        # commit: the scope releases them, dependents first, even if the
+        # commit raises
+        with cache_scope():
+            # build_round materializes the pop (cache + count, no fetch): the
+            # count is the stop condition, its duration the true frontier-pop
+            # latency, and the known size picks the seq implementation.
+            # fetched/failed counters ride the crawl_log write inside the
+            # commit via an Observation — no separate fetch-materializing
+            # counting action per round.
+            deltas, popped, _slim, n_popped, pop_latency = build_round(
+                state, robots, fetcher, params, bloom
             )
-            try:
-                prev_regs = catalog.read_table("host_url_hll")
-                new_regs = (
-                    prev_regs.unionByName(new_regs)
-                    .groupBy("host", "register")
-                    .agg(F.max("rank").alias("rank"))
+            rnd = state.round + 1
+            if n_popped == 0:
+                break
+
+            if bloom is not None:
+                bloom.update(deltas.seen_delta, state.round if state.round > 0 else None, rnd)
+
+            from pyspark.sql import Observation
+
+            obs = Observation(f"round-{rnd}")
+            log_observed = deltas.log_delta.observe(
+                obs,
+                F.count(F.when(F.col("status") == "fetched", 1)).alias("fetched"),
+                F.count(F.when(F.col("status") == "revalidated", 1)).alias(
+                    "revalidated"
+                ),
+                F.count(F.when(F.col("status") == "redirected", 1)).alias(
+                    "redirected"
+                ),
+                F.count("*").alias("n"),
+            )
+
+            def counters_fn() -> dict:
+                # evaluated by commit() AFTER the table writes (the crawl_log
+                # write fires the observation), BEFORE the manifest swap — so
+                # the counters land in the same atomic snapshot.
+                got = obs.get
+                return {
+                    "round": rnd,
+                    "popped": n_popped,
+                    "fetched": int(got["fetched"]),
+                    "revalidated": int(got["revalidated"]),
+                    "redirected": int(got["redirected"]),
+                    "failed": int(
+                        got["n"]
+                        - got["fetched"]
+                        - got["revalidated"]
+                        - got["redirected"]
+                    ),
+                }
+
+            rewrite_tables = {
+                "frontier": deltas.frontier,
+                "host_counts": deltas.host_counts,
+            }
+            if deltas.host_delays is not None:
+                rewrite_tables["host_delays"] = deltas.host_delays
+            if params.host_hll_p is not None:
+                # per-host distinct-URL HLL riding the round commit: register
+                # rows for this round's popped urls (the exact seen-delta
+                # universe), max-merged into the committed table — idempotent,
+                # so crash/replay/resume cannot double-count; O(hosts x 2^p)
+                # rows total, never the url universe. Batch-equality contract:
+                # tests/test_hll.py::test_crawl_host_hll_matches_batch.
+                from ..operators.hll import hll_registers_by
+
+                new_regs = hll_registers_by(
+                    popped.select("host", "url"), ["host"], "url", p=params.host_hll_p
                 )
-            except KeyError:
-                pass  # first round: no committed register table yet
-            rewrite_tables["host_url_hll"] = new_regs
-        appends = {
-            "seen": deltas.seen_delta,
-            "pages": deltas.pages_delta,
-            "crawl_log": log_observed,
-        }
-        if deltas.aliases_delta is not None:
-            appends["url_aliases"] = deltas.aliases_delta
-        snap = catalog.commit(
-            rnd,
-            tables=rewrite_tables,
-            appends=appends,
-            counters=counters_fn,
-            output_partitions=output_partitions,
-            # frontier/seen live bucket-partitioned on disk: per-bucket scans
-            # are co-located and prunable (SURVEY.md §4.3 partitioning)
-            partition_by={"frontier": ["bucket"], "seen": ["bucket"]},
-            # pages (python-UDF-heavy) writes alone first; the small
-            # JVM-only state writes then overlap each other (tables.py)
-            serial_first=("pages",),
-        )
+                try:
+                    prev_regs = catalog.read_table("host_url_hll")
+                    new_regs = (
+                        prev_regs.unionByName(new_regs)
+                        .groupBy("host", "register")
+                        .agg(F.max("rank").alias("rank"))
+                    )
+                except KeyError:
+                    pass  # first round: no committed register table yet
+                rewrite_tables["host_url_hll"] = new_regs
+            appends = {
+                "seen": deltas.seen_delta,
+                "pages": deltas.pages_delta,
+                "crawl_log": log_observed,
+            }
+            if deltas.aliases_delta is not None:
+                appends["url_aliases"] = deltas.aliases_delta
+            snap = catalog.commit(
+                rnd,
+                tables=rewrite_tables,
+                appends=appends,
+                counters=counters_fn,
+                output_partitions=output_partitions,
+                # frontier/seen live bucket-partitioned on disk: per-bucket scans
+                # are co-located and prunable (SURVEY.md §4.3 partitioning)
+                partition_by={"frontier": ["bucket"], "seen": ["bucket"]},
+                # pages (python-UDF-heavy) writes alone first; the small
+                # JVM-only state writes then overlap each other (tables.py)
+                serial_first=("pages",),
+            )
         counters = snap.counters
-        # dependents first: the slim cache reads the fetch frame, which
-        # reads the pop
-        for df in (fetched_slim, deltas.fetched, popped):
-            df.unpersist()
         if compact_every is not None and rnd % compact_every == 0:
             for t in ("seen", "pages", "crawl_log"):
                 catalog.compact(
@@ -752,97 +749,95 @@ def retire_and_requeue(
         F.max("round").alias("last_round"),
         F.max_by("status", "round").alias("last_status"),
     )
-    from pyspark import StorageLevel
-
-    retired = (
-        seen.join(
-            last.select(
-                F.xxhash64("url").alias("url_hash"), "last_round", "last_status"
-            ),
-            "url_hash",
+    # `retired` is read by the commit AND the filter retirement after it;
+    # the scope releases it once both ran (or either raised)
+    with cache_scope():
+        retired = scoped(
+            seen.join(
+                last.select(
+                    F.xxhash64("url").alias("url_hash"), "last_round", "last_status"
+                ),
+                "url_hash",
+            )
+            .where(F.col("last_round") <= F.lit(cutoff))
+            .select("bucket", "url_hash", "url", "last_status")
         )
-        .where(F.col("last_round") <= F.lit(cutoff))
-        .select("bucket", "url_hash", "url", "last_status")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_retired = retired.count()
-    if n_retired == 0:
-        retired.unpersist()
-        return 0
+        n_retired = retired.count()
+        if n_retired == 0:
+            return 0
 
-    seen_after = seen.join(retired.select("url_hash"), "url_hash", "left_anti")
+        seen_after = seen.join(retired.select("url_hash"), "url_hash", "left_anti")
 
-    from .frontier import disallowed_col
-    from ..functions import urls as U
+        from .frontier import disallowed_col
+        from ..functions import urls as U
 
-    # Freshness-driven recrawl priority (opt-in): urls whose revisit
-    # history shows content CHANGES re-enter the frontier above the flat
-    # requeue_priority, proportional to their observed change rate — the
-    # scheduler recrawls what actually moves (Cho & Garcia-Molina). With
-    # weight 0 the plan and priorities are bit-identical to before.
-    prio: F.Column = F.lit(requeue_priority).cast("double")
-    base = retired.withColumn("host", U.host_of(F.col("url")))
-    if freshness_weight:
-        rates = change_rates(catalog).select(
-            F.xxhash64("url").alias("url_hash"),
-            (
-                F.lit(freshness_weight)
-                * F.col("changes")
-                / F.greatest(F.col("revisits"), F.lit(1)).cast("double")
-            ).alias("__fresh_bonus"),
+        # Freshness-driven recrawl priority (opt-in): urls whose revisit
+        # history shows content CHANGES re-enter the frontier above the flat
+        # requeue_priority, proportional to their observed change rate — the
+        # scheduler recrawls what actually moves (Cho & Garcia-Molina). With
+        # weight 0 the plan and priorities are bit-identical to before.
+        prio: F.Column = F.lit(requeue_priority).cast("double")
+        base = retired.withColumn("host", U.host_of(F.col("url")))
+        if freshness_weight:
+            rates = change_rates(catalog).select(
+                F.xxhash64("url").alias("url_hash"),
+                (
+                    F.lit(freshness_weight)
+                    * F.col("changes")
+                    / F.greatest(F.col("revisits"), F.lit(1)).cast("double")
+                ).alias("__fresh_bonus"),
+            )
+            base = base.join(rates, "url_hash", "left")
+            prio = prio + F.coalesce(F.col("__fresh_bonus"), F.lit(0.0))
+        requeued = (
+            base
+            .join(F.broadcast(robots.select("host", "disallow", "allow")), "host", "left")
+            .where(~disallowed_col(F.col("url"), F.col("disallow"), F.col("allow")))
+            .select(
+                "bucket",
+                U.url_salt(F.col("url"), params.n_salts).alias("salt"),
+                "host",
+                "url",
+                "url_hash",
+                prio.alias("priority"),
+                F.lit(0).alias("depth"),
+                F.lit(rnd).alias("discovered_round"),
+            )
+            .join(frontier.select("url_hash"), "url_hash", "left_anti")
         )
-        base = base.join(rates, "url_hash", "left")
-        prio = prio + F.coalesce(F.col("__fresh_bonus"), F.lit(0.0))
-    requeued = (
-        base
-        .join(F.broadcast(robots.select("host", "disallow", "allow")), "host", "left")
-        .where(~disallowed_col(F.col("url"), F.col("disallow"), F.col("allow")))
-        .select(
-            "bucket",
-            U.url_salt(F.col("url"), params.n_salts).alias("salt"),
+        frontier_after = frontier.unionByName(requeued)
+
+        dec = (
+            # a url whose last visit was a 304 revalidation holds live budget
+            # exactly like a fresh fetch — retiring either frees the slot
+            retired.where(F.col("last_status").isin("fetched", "revalidated"))
+            .withColumn("host", U.host_of(F.col("url")))
+            .groupBy("host")
+            .agg(F.count("*").alias("n_retired"))
+        )
+        hc_after = host_counts.join(dec, "host", "left").select(
             "host",
-            "url",
-            "url_hash",
-            prio.alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit(rnd).alias("discovered_round"),
+            F.greatest(
+                F.lit(0).cast("long"),
+                F.col("fetched") - F.coalesce(F.col("n_retired"), F.lit(0)),
+            ).alias("fetched"),
         )
-        .join(frontier.select("url_hash"), "url_hash", "left_anti")
-    )
-    frontier_after = frontier.unionByName(requeued)
 
-    dec = (
-        # a url whose last visit was a 304 revalidation holds live budget
-        # exactly like a fresh fetch — retiring either frees the slot
-        retired.where(F.col("last_status").isin("fetched", "revalidated"))
-        .withColumn("host", U.host_of(F.col("url")))
-        .groupBy("host")
-        .agg(F.count("*").alias("n_retired"))
-    )
-    hc_after = host_counts.join(dec, "host", "left").select(
-        "host",
-        F.greatest(
-            F.lit(0).cast("long"),
-            F.col("fetched") - F.coalesce(F.col("n_retired"), F.lit(0)),
-        ).alias("fetched"),
-    )
+        from ..sources.tables import COMPACTION_ID_BASE
 
-    from ..sources.tables import COMPACTION_ID_BASE
+        counters = dict(snap.counters)
+        counters["retired"] = int(counters.get("retired", 0)) + n_retired
+        catalog.commit(
+            catalog.next_snapshot_id(floor=COMPACTION_ID_BASE),
+            tables={"frontier": frontier_after, "seen": seen_after, "host_counts": hc_after},
+            counters=counters,
+            output_partitions=output_partitions,
+            partition_by={"frontier": ["bucket"], "seen": ["bucket"]},
+        )
 
-    counters = dict(snap.counters)
-    counters["retired"] = int(counters.get("retired", 0)) + n_retired
-    catalog.commit(
-        catalog.next_snapshot_id(floor=COMPACTION_ID_BASE),
-        tables={"frontier": frontier_after, "seen": seen_after, "host_counts": hc_after},
-        counters=counters,
-        output_partitions=output_partitions,
-        partition_by={"frontier": ["bucket"], "seen": ["bucket"]},
-    )
-
-    if use_bloom:
-        store = BloomStore(catalog_root, params, filter_kind=seen_filter)
-        # read seen from the NEW snapshot: single rewritten dir, and the
-        # bloom-kind bucket rebuild must see exactly the post-retire truth
-        store.retire(retired.select("bucket", "url_hash"), catalog.read_table("seen"), rnd)
-    retired.unpersist()
+        if use_bloom:
+            store = BloomStore(catalog_root, params, filter_kind=seen_filter)
+            # read seen from the NEW snapshot: single rewritten dir, and the
+            # bloom-kind bucket rebuild must see exactly the post-retire truth
+            store.retire(retired.select("bucket", "url_hash"), catalog.read_table("seen"), rnd)
     return n_retired

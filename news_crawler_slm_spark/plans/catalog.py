@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import knuth_shuffle_key, knuth_shuffle_key_sql
+from ..session import scoped
 
 QuerySpec = tuple[Callable[[SparkSession, str], DataFrame], str | None]
 
@@ -1058,17 +1059,14 @@ def kn_bigram_perplexity(spark, sf_dir):
     2-corpus-scan budget as bigram_perplexity: the Z aggregate reads the
     census cache, not the corpus.
     """
-    from pyspark import StorageLevel
-
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     norm = ws_normalize(F.lower(F.col("text")))
     big = d.select("doc_id", F.explode(word_windows(norm, 2)).alias("g"))
-    bc = (
+    bc = scoped(
         big.groupBy("g")
         .agg(F.count("*").alias("c12"))
         .withColumn("w1", F.split("g", " ").getItem(0))
         .withColumn("w2", F.split("g", " ").getItem(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     zdim = bc.agg(F.count("*").alias("z"))
     w1w, w2w = Window.partitionBy("w1"), Window.partitionBy("w2")
@@ -1193,8 +1191,6 @@ def nb_lang_classifier(spark, sf_dir):
     times (train tokenize, score tokenize, |langs|-row prior census) at
     any corpus size.
     """
-    from pyspark import StorageLevel
-
     d = _spread(
         _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"), "doc_id"
     )
@@ -1210,11 +1206,7 @@ def nb_lang_classifier(spark, sf_dir):
     )
     # ONE training pass; vocab, V and per-lang totals all derive from
     # this persisted vocab-sized dim instead of re-tokenizing the corpus
-    ltc = (
-        toks.groupBy("lang", "tok")
-        .agg(F.count("*").alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    ltc = scoped(toks.groupBy("lang", "tok").agg(F.count("*").alias("c")))
     ltot = ltc.groupBy("lang").agg(F.sum("c").alias("ct"))
     vsz = ltc.select("tok").distinct().agg(F.count("*").alias("v"))
     lcounts = d.groupBy("lang").agg(F.count("*").alias("nl"))
@@ -1768,16 +1760,10 @@ def temperature_mixture_sample(spark, sf_dir):
     """
     d = _t(spark, sf_dir, "documents")
     target = 250.0
-    from pyspark import StorageLevel
-
     # the per-source census persists (O(#sources) rows): its two
     # consumers (the z normalizer and the rates dim) and nothing else
     # re-scan the corpus — per-execution work is the keep pass alone
-    counts = (
-        d.groupBy("source")
-        .agg(F.count("*").alias("n_docs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    counts = scoped(d.groupBy("source").agg(F.count("*").alias("n_docs")))
     tot = counts.agg(F.sum(F.sqrt(F.col("n_docs").cast("double"))).alias("z"))
     rates = counts.crossJoin(F.broadcast(tot)).select(
         "source",

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import md5_long, md5_long_duck
+from ..session import cache_scope, scoped
 from .catalog import _spread, _t, register, word_windows, ws_normalize
 
 # ===========================================================================
@@ -141,8 +142,6 @@ def ngram_jaccard_pairs(spark, sf_dir, df_cap: int = 64):
         .agg(F.count("*").alias("df"))
         .where(F.col("df") > df_cap)
     )
-    from pyspark import StorageLevel
-
     # over-cap shingles are few by construction (boilerplate) — broadcast
     # ANTI join, mirroring the minhash band-bucket cap. The capped index
     # is consumed by sizes + both self-join sides; left lazy, each
@@ -150,9 +149,9 @@ def ngram_jaccard_pairs(spark, sf_dir, df_cap: int = 64):
     # shuffle) — measured r06: 8 corpus scans. Persist it: this IS the
     # inverted index, the artifact a production similarity pipeline
     # materializes once per corpus version.
-    grams = grams0.join(
-        F.broadcast(hot.select("source", "g")), ["source", "g"], "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    grams = scoped(
+        grams0.join(F.broadcast(hot.select("source", "g")), ["source", "g"], "left_anti")
+    )
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = grams.alias("a")
     b = grams.alias("b")
@@ -271,17 +270,17 @@ def minhash_lsh_candidates(spark, sf_dir, bucket_cap: int = 64):
     core ``operators/incremental_dedup.py:minhash_bands`` — the same
     definition powers the incremental index, so batch and incremental can
     never drift."""
-    from pyspark import StorageLevel
-
     from ..operators.incremental_dedup import minhash_bands
 
     # the band frame feeds the hot-bucket census AND both self-join sides;
     # left lazy each consumer re-runs the shingle->md5->min sketch pass
     # (4 corpus scans measured r06) — persist the O(docs x 4 bands) frame,
     # the same materialized-sketch discipline as minhash_jaccard_estimates
-    banded = minhash_bands(
-        _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    banded = scoped(
+        minhash_bands(
+            _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+        )
+    )
     return _lsh_candidate_pairs(banded, bucket_cap)
 
 
@@ -398,19 +397,13 @@ def simhash_neardup_pairs(spark, sf_dir, hamming_max: int = 3, bucket_cap: int =
     bit_count) — no Python.  Full DuckDB value oracle (same 60-bit
     md5_long hash, banding + cap); pure-Python twin in
     tests/test_dedup.py."""
-    from pyspark import StorageLevel
-
     # the voted-fingerprint aggregation is the expensive stage (token
     # explode + md5 + 60 conditional sums); its four consumers (hot-bucket
     # census + both self-join sides, each twice through the cap's anti
     # join) would re-run it 4x through lineage fan-out (measured r06:
     # 8 corpus scans) — persist the O(docs)x2-column frame instead, the
     # materialized fingerprint-table step of a production simhash dedup
-    fps = simhash_fingerprints_of(
-        _spread(_dup_union(spark, sf_dir), "doc_id")
-    ).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    fps = scoped(simhash_fingerprints_of(_spread(_dup_union(spark, sf_dir), "doc_id")))
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -610,8 +603,6 @@ def ann_lsh_topk(spark, sf_dir, bands: int = 8, bits: int = 8, k: int = 5):
     can recover near-orthogonal "neighbors" there without scanning
     ~everything; the same test pins the measured recall floor on that
     corpus too)."""
-    from pyspark import StorageLevel
-
     emb = _spread(
         _t(spark, sf_dir, "embeddings").select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
@@ -647,13 +638,15 @@ def ann_lsh_topk(spark, sf_dir, bands: int = 8, bits: int = 8, k: int = 5):
     # lazy frame re-runs the bands x bits interpreted hyperplane folds —
     # the query's dominant cost — once per side; the cache is bounded at
     # bands x |vectors| rows
-    banded = emb.select(
-        "vec_id",
-        "e",
-        F.explode(F.array(*[band_bucket(b) for b in range(bands)])).alias("bb"),
-    ).select(
-        "vec_id", "e", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    banded = scoped(
+        emb.select(
+            "vec_id",
+            "e",
+            F.explode(F.array(*[band_bucket(b) for b in range(bands)])).alias("bb"),
+        ).select(
+            "vec_id", "e", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        )
+    )
 
     a = banded.alias("a")
     b_ = banded.alias("b")
@@ -1115,17 +1108,17 @@ def paragraph_dedup(spark, sf_dir):
     the kept units (bounded by document size, not corpus size).  Linear
     at any corpus scale — the same plan C4 ran over Common Crawl.
     """
-    from pyspark import StorageLevel
-
     d = _t(spark, sf_dir, "documents")
     aug = F.when(
         F.col("doc_id") % 5 == 0,
         F.concat(F.lit(_BOILER + ". "), F.col("text")),
     ).otherwise(F.col("text"))
-    paras = d.select(
-        "doc_id",
-        F.posexplode(F.split(aug, r"\.\s+")).alias("pos", "para"),
-    ).withColumn("h", F.md5("para")).persist(StorageLevel.MEMORY_AND_DISK)
+    paras = scoped(
+        d.select(
+            "doc_id",
+            F.posexplode(F.split(aug, r"\.\s+")).alias("pos", "para"),
+        ).withColumn("h", F.md5("para"))
+    )
     keeper = paras.groupBy("h").agg(
         F.min(F.struct("doc_id", "pos")).alias("k")
     )
@@ -1178,7 +1171,6 @@ def ivf_kmeans_centroids(spark, emb, k_cells: int = 10, max_iters: int = 8):
     """
     import numpy as np
     import pandas as pd
-    from pyspark import StorageLevel
     from pyspark.sql import types as T
 
     seeds = (
@@ -1198,9 +1190,9 @@ def ivf_kmeans_centroids(spark, emb, k_cells: int = 10, max_iters: int = 8):
         ]
     )
 
-    vecs = emb.select("e").persist(StorageLevel.MEMORY_AND_DISK)
     prev_state = None
-    try:
+    with cache_scope():
+        vecs = scoped(emb.select("e"))
         for _ in range(max_iters):
             C_unit = C / np.linalg.norm(C, axis=1, keepdims=True)
 
@@ -1239,8 +1231,6 @@ def ivf_kmeans_centroids(spark, emb, k_cells: int = 10, max_iters: int = 8):
             if state == prev_state:  # fixed point: exact integer equality
                 break
             prev_state = state
-    finally:
-        vecs.unpersist()
     return {i: C[i].tolist() for i in range(C.shape[0])}
 
 
@@ -1399,16 +1389,16 @@ def substring_dup_stats(spark, sf_dir, w: int = _SUBSTR_W):
     sorted, and the explode is W x token count — linear in corpus bytes,
     the standard trade vs the paper's single-node suffix array.
     """
-    from pyspark import StorageLevel
-
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     wins = d.select(
         "doc_id",
         F.posexplode(word_windows(ws_normalize(F.col("text")), w)).alias("p0", "g"),
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), F.xxhash64("g").alias("h"))
-    per_doc = wins.groupBy("h", "doc_id").agg(
-        F.count("*").alias("cnt"), F.min("pos").alias("min_pos")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    per_doc = scoped(
+        wins.groupBy("h", "doc_id").agg(
+            F.count("*").alias("cnt"), F.min("pos").alias("min_pos")
+        )
+    )
     keeper = per_doc.groupBy("h").agg(
         F.min(F.struct("doc_id", "min_pos")).alias("k")
     )
@@ -2015,14 +2005,12 @@ def cms_heavy_hitters(
     The DuckDB oracle recomputes every cell, the threshold, and the
     per-token minima exactly over the same md5 cell algebra (integer-only
     — bit-identical cross-engine)."""
-    from pyspark import StorageLevel
-
     toks = _cms_token_stream(spark, sf_dir)
     # the sketch has five consumers (four per-depth broadcast slices + the
     # row-0 total); left lazy, each re-runs the sketch-building corpus
     # scan (measured r06: 6 scans) — persist the <= d*w-row frame so the
     # corpus is sketched once and re-scanned once (the probe pass)
-    counts = _cms_counts(toks, depth, width).persist(StorageLevel.MEMORY_AND_DISK)
+    counts = scoped(_cms_counts(toks, depth, width))
     total = counts.where(F.col("row") == 0).agg(
         F.sum("c").cast("long").alias("n_total")
     )
@@ -2118,20 +2106,12 @@ def minhash_jaccard_estimates(spark, sf_dir, bucket_cap: int = 64):
     to CANDIDATE pairs, never the corpus, and candidate docs are
     semi-join-pruned BEFORE their shingle sets are re-derived, so the
     gram explode+distinct — the token-universe shuffle — runs over
-    candidate docs only. The three caches are scoped to the returned
-    plan's lifetime (caller-owned, same contract as
-    ``prepare_training_data``'s ``keyed`` stage — unpersist via
-    ``spark.catalog.clearCache()`` when re-running in a long session).
-    Full DuckDB value oracle via the shared _minhash_cte chain."""
-    from pyspark import StorageLevel
-
+    candidate docs only. Full DuckDB value oracle via the shared _minhash_cte chain."""
     from ..operators.incremental_dedup import minhash_bands_of, minhash_signatures
 
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
-    sigs = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = _lsh_candidate_pairs(minhash_bands_of(sigs), bucket_cap).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sigs = scoped(minhash_signatures(docs))
+    cand = scoped(_lsh_candidate_pairs(minhash_bands_of(sigs), bucket_cap))
     sa = sigs.alias("sa")
     sb = sigs.alias("sb")
     matches = sum(
@@ -2150,14 +2130,13 @@ def minhash_jaccard_estimates(spark, sf_dir, bucket_cap: int = 64):
     # the candidate doc set is LSH-pruned — small by construction; prune
     # the DOCS before shingling so the distinct-gram shuffle never sees
     # non-candidate text
-    cgrams = (
+    cgrams = scoped(
         docs.join(F.broadcast(cand_docs), "doc_id", "left_semi")
         .select(
             "doc_id",
             F.explode(word_windows(ws_normalize(F.col("text")), 3)).alias("g"),
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sizes = cgrams.groupBy("doc_id").agg(F.count("*").alias("sz"))
     ga = cgrams.alias("ga")

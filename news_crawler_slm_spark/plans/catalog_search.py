@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import scoped
 from .catalog import _spread, _t, register
 
 _POSTINGS_CAP = 20
@@ -112,8 +113,6 @@ def tfidf_search(spark, sf_dir, query: list[str] | None = None, k: int = 20):
     top-k is a global TakeOrdered with (score DESC, doc_id) tie-break, no
     full sort.
     """
-    from pyspark import StorageLevel
-
     q = query or _QUERY_TOKENS
     d = _t(spark, sf_dir, "documents")
     # N as a broadcast 1-row scalar subquery — no separate driver count()
@@ -131,11 +130,7 @@ def tfidf_search(spark, sf_dir, query: list[str] | None = None, k: int = 20):
     # which funnels every hit row through at most |query| tasks — the
     # straggler shape for a common query term at scale; the census +
     # broadcast join keeps the df exchange at |query| x mappers rows.
-    tf = (
-        hits.groupBy("doc_id", "token")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tf = scoped(hits.groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
     dfdim = tf.groupBy("token").agg(F.count("*").alias("df"))
     scored = (
         tf.join(F.broadcast(dfdim), "token")
@@ -223,8 +218,6 @@ def bm25_search(spark, sf_dir, query: list[str] | None = None, k: int = 20):
     every hit row at scale); (n_docs, avgdl) is a broadcast 1-row dim;
     top-k is a TakeOrdered, no full sort.
     """
-    from pyspark import StorageLevel
-
     q = query or _QUERY_TOKENS
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
@@ -237,11 +230,7 @@ def bm25_search(spark, sf_dir, query: list[str] | None = None, k: int = 20):
     hits = d.select(
         "doc_id", F.size(toks).alias("dl"), F.explode(toks).alias("token")
     ).where(F.col("token").isin(q))
-    tf = (
-        hits.groupBy("doc_id", "dl", "token")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tf = scoped(hits.groupBy("doc_id", "dl", "token").agg(F.count("*").alias("tf")))
     dfdim = tf.groupBy("token").agg(F.count("*").alias("df"))
     dfx = tf.join(F.broadcast(dfdim), "token").crossJoin(F.broadcast(stats))
     idf_micro = F.round(

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import knuth_shuffle_key, knuth_shuffle_key_sql
 from ..operators.rank import grouped_row_number
+from ..session import scoped
 from .catalog import _spread, _t, register, word_windows, ws_normalize
 
 # ---------------------------------------------------------------------------
@@ -201,13 +202,7 @@ def ccnet_perplexity_buckets(spark, sf_dir):
     # consumers (per-lang totals + the log-prob dim) and the scoring pass
     # all read the vocab-sized cache instead of re-running the tokenize
     # aggregation (3 corpus scans measured r06 before this)
-    from pyspark import StorageLevel
-
-    vocab = (
-        toks.groupBy("lang", "tok")
-        .agg(F.count("*").alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    vocab = scoped(toks.groupBy("lang", "tok").agg(F.count("*").alias("c")))
     tot = vocab.groupBy("lang").agg(F.sum("c").alias("n"))
     dim = vocab.join(F.broadcast(tot), "lang").select(
         "lang",
@@ -219,11 +214,10 @@ def ccnet_perplexity_buckets(spark, sf_dir):
     # per-doc scores persist too: the size-gate's eager collect below is
     # then the ONE materialization — without it the rank stage re-ran the
     # whole score pipeline from parquet after the collect already had
-    per = (
+    per = scoped(
         toks.join(F.broadcast(dim), ["lang", "tok"])
         .groupBy("doc_id", "lang")
         .agg(F.count("*").alias("n_tokens"), F.sum("lnp_micro").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sized = per.groupBy("lang").agg(F.count("*").alias("lang_docs"))
     # size-aware dispatch (r06): the per-lang doc counts are already on
@@ -369,15 +363,13 @@ def dsir_importance_weights(spark, sf_dir):
     hashed = vocab.select(
         "tok", "c_raw", "c_tgt", (rk % F.lit(B)).alias("bucket")
     )
-    from pyspark import StorageLevel
-
     # the |vocab|-row hashed census persists (train-once discipline): its
     # consumers — the bucket census chain (bkt → totals → log-ratio dim)
     # and the per-token bucket mapping — read the cache instead of each
     # re-running the tokenize+vocab training scan, leaving the score pass
     # as the only per-execution corpus scan. dsir_resample inherits this
     # through its call here.
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
+    hashed = scoped(hashed)
     bkt = hashed.groupBy("bucket").agg(
         F.sum("c_raw").alias("cr"), F.sum("c_tgt").alias("ct")
     )
@@ -590,19 +582,13 @@ def stupid_backoff_scores(spark, sf_dir):
         _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"), "doc_id"
     )
     norm = ws_normalize(F.lower(F.col("text")))
-    from pyspark import StorageLevel
-
     big = d.select("doc_id", "lang", F.explode(word_windows(norm, 2)).alias("g"))
     train_big = big.where(F.col("lang") == _SB_TRAIN_LANG)
     # both trained dims persist (train-once discipline): bc feeds the
     # context totals AND the bigram dim, uc feeds N AND the unigram dim —
     # left lazy each pair re-ran its training scan (6 corpus scans
     # measured r06; 3 after: bigram train, unigram train, score pass)
-    bc = (
-        train_big.groupBy("g")
-        .agg(F.count("*").alias("c12"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    bc = scoped(train_big.groupBy("g").agg(F.count("*").alias("c12")))
     bc = bc.withColumn("w1", F.split("g", " ").getItem(0))
     ctx = bc.groupBy("w1").agg(F.sum("c12").alias("c1"))
     bdim = bc.join(ctx, "w1").select(
@@ -614,11 +600,7 @@ def stupid_backoff_scores(spark, sf_dir):
     train_toks = d.where(F.col("lang") == _SB_TRAIN_LANG).select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
     )
-    uc = (
-        train_toks.groupBy("tok")
-        .agg(F.count("*").alias("cu"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    uc = scoped(train_toks.groupBy("tok").agg(F.count("*").alias("cu")))
     n = uc.agg(F.sum("cu").alias("nt"))
     udim = uc.crossJoin(F.broadcast(n)).select(
         "tok",
@@ -772,8 +754,6 @@ def stupid_backoff_trigram_scores(spark, sf_dir):
     denominator and the backoff rung). The docstring above
     ``stupid_backoff_scores`` covers the family's reference analog.
     """
-    from pyspark import StorageLevel
-
     d = _spread(
         _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"), "doc_id"
     )
@@ -783,11 +763,7 @@ def stupid_backoff_trigram_scores(spark, sf_dir):
     big_train = d.where(F.col("lang") == _SB_TRAIN_LANG).select(
         F.explode(word_windows(norm, 2)).alias("g")
     )
-    bc = (
-        big_train.groupBy("g")
-        .agg(F.count("*").alias("c12"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    bc = scoped(big_train.groupBy("g").agg(F.count("*").alias("c12")))
     bc = bc.withColumn("w1", F.split("g", " ").getItem(0))
     ctx = bc.groupBy("w1").agg(F.sum("c12").alias("c1"))
 
@@ -821,11 +797,7 @@ def stupid_backoff_trigram_scores(spark, sf_dir):
     train_toks = d.where(F.col("lang") == _SB_TRAIN_LANG).select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
     )
-    uc = (
-        train_toks.groupBy("tok")
-        .agg(F.count("*").alias("cu"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    uc = scoped(train_toks.groupBy("tok").agg(F.count("*").alias("cu")))
     n = uc.agg(F.sum("cu").alias("nt"))
     udim = uc.crossJoin(F.broadcast(n)).select(
         "tok",

@@ -19,7 +19,8 @@ map-only — and the shuffle/pack unit becomes the chunk, keyed on
   documented cost of the real FineWeb/Dolma-style gate; survivors carry
   the heuristic metric columns either way so packing sees n_tokens).
 - exact dedup: min doc_id per md5(text) content group (catalog
-  `exact_dedup` semantics), via a window over the hash — one shuffle.
+  `exact_dedup` semantics), via a min_by aggregate over the hash — one
+  shuffle.
 - near-dup dedup: sketch → capped bucket join → connected components →
   keep the min-doc_id representative per component (catalog
   `neardup_clusters`/`neardup_survivors_count` semantics, via the shared
@@ -42,7 +43,6 @@ finetune_model.py (cited for scope; there is no distributed equivalent).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import knuth_shuffle_key
 from ..operators.prefix_sum import running_sum_by_key
+from ..session import scoped
 from ..streaming.quality import quality_gate
 
 
@@ -76,41 +77,14 @@ class TrainingPrepParams:
     chunk_stride: int | None = None
 
 
-@contextmanager
-def training_data_session(docs: DataFrame, params: TrainingPrepParams):
-    """Scoped variant of ``prepare_training_data``: yields the same result
-    plan, and unpersists the internal ``keyed`` cache on exit — the
-    returned plan depends on that cache, so consume (collect/write) the
-    result INSIDE the block. Repeated pipeline runs in one session then
-    release their cached partitions deterministically instead of
-    accumulating them (or nuking unrelated caches with
-    spark.catalog.clearCache)."""
-    result, keyed = _build_training_data(docs, params)
-    try:
-        yield result
-    finally:
-        keyed.unpersist()
-
-
 def prepare_training_data(docs: DataFrame, params: TrainingPrepParams) -> DataFrame:
     """docs needs (doc_id, text). Returns one row per surviving document:
     (doc_id, text, n_tokens, shuffle_key, cum_before, batch_id), where
     batch_id groups documents into ``token_budget``-sized training batches
     in deterministic shuffled order.
 
-    The plan depends on an internal persisted stage that this function
-    cannot release (the caller owns the result's lifetime); use
-    ``training_data_session`` when running the pipeline repeatedly in one
-    session so each run's cache is unpersisted on scope exit."""
-    return _build_training_data(docs, params)[0]
-
-
-def _build_training_data(
-    docs: DataFrame, params: TrainingPrepParams
-) -> tuple[DataFrame, DataFrame]:
-    """-> (result plan, the persisted ``keyed`` stage backing it)."""
-    from pyspark import StorageLevel
-
+    The plan reads an internal persisted stage (``session.scoped``): consume
+    it inside a ``cache_scope()`` to release that cache on exit."""
     from .catalog_dedup import neardup_components
 
     if params.gate == "composite":
@@ -140,19 +114,15 @@ def _build_training_data(
     # exact dedup keeper = min doc_id per content hash, as an AGGREGATE
     # carrying the whole row (r07: was a row_number window PARTITION BY
     # __h — a mass-duplicated page is a hot hash, and a window partition
-    # cannot be split, while min(struct) partial-aggregates map-side so
-    # the hash-keyed exchange ships ONE surviving row per (hash, mapper)
-    # instead of every duplicate's full text).  doc_id is unique, so the
-    # struct order equals the window's (doc_id ASC) keeper rule exactly.
-    gcols = gated.columns
+    # cannot be split, while min_by partial-aggregates map-side so the
+    # hash-keyed exchange ships ONE surviving row per (hash, mapper)
+    # instead of every duplicate's full text).  doc_id is unique, so
+    # min_by picks the window's (doc_id ASC) keeper exactly, and only
+    # doc_id needs an ordering — a caller's map column rides along.
     deduped = (
         gated.groupBy(F.md5("text").alias("__h"))
-        .agg(
-            F.min(
-                F.struct(F.col("doc_id"), F.struct(*gcols).alias("r"))
-            ).alias("m")
-        )
-        .select("m.r.*")
+        .agg(F.min_by(F.struct(*gated.columns), "doc_id").alias("r"))
+        .select("r.*")
     )
 
     exact_deduped = None
@@ -160,7 +130,7 @@ def _build_training_data(
         # the gate+exact-dedup lineage feeds BOTH the component edge build
         # (eager, inside the propagation loop) and the downstream keyed
         # plan — persist it so the expensive upstream materializes once
-        exact_deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
+        exact_deduped = scoped(deduped)
         # keeper = the doc that IS its component label (min doc_id per
         # component) — a broadcast-free semi join on doc_id
         comp = neardup_components(exact_deduped.select("doc_id", "text"))
@@ -210,12 +180,11 @@ def _build_training_data(
     # the prefix sum traverses its input three times (bounds agg, bucket
     # totals, final window); persist so the dedup join runs once — the two
     # control aggregations then read the materialized partitions
-    keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    keyed = scoped(keyed)
     packed = running_sum_by_key(keyed, key="shuffle_key", weight="n_tokens")
     # running_sum_by_key's control aggregations materialized `keyed`, so
-    # the upstream cache is no longer needed; `keyed` itself stays
-    # persisted (the returned plan's final window reads it) and is handed
-    # back so training_data_session can release it on scope exit
+    # the upstream cache can go now; `keyed` itself stays persisted (the
+    # returned plan's final window reads it) until the scope exits
     if exact_deduped is not None:
         exact_deduped.unpersist()
     result = packed.select(
@@ -228,4 +197,4 @@ def _build_training_data(
         .cast("long")
         .alias("batch_id"),
     )
-    return result, keyed
+    return result

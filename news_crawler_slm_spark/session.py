@@ -10,6 +10,10 @@ One place to encode the execution-model decisions that matter at 100 TB:
 - Shuffle partitions default to the core count locally; on a real cluster this
   is overridden to ~2-3x total cores (AQE coalesces the excess).
 
+It also owns the one cache-lifetime rule: every intermediate the engine
+persists goes through ``scoped()``, and the innermost open ``cache_scope()``
+releases it on exit.
+
 Reference analog: none — the reference is a single sequential Python process
 (/root/reference/data_extraction/crawl_articles.py:45-118).
 """
@@ -17,8 +21,11 @@ Reference analog: none — the reference is a single sequential Python process
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -81,3 +88,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# the open cache scopes, innermost last; each holds the frames persisted in it
+_SCOPES: ContextVar[tuple[list[DataFrame], ...]] = ContextVar("cache_scopes", default=())
+
+
+@contextmanager
+def cache_scope():
+    """Release, on exit and in LIFO order, every frame ``scoped()`` persisted
+    inside the block. LIFO unpersists dependents before the caches they read,
+    so Spark never re-plans a cache over one that is going away. Consume
+    (collect/count/write) a plan that reads scoped frames INSIDE the block.
+    Scopes nest; a frame belongs to the innermost one."""
+    frames: list[DataFrame] = []
+    token = _SCOPES.set(_SCOPES.get() + (frames,))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for df in reversed(frames):
+            df.unpersist()
+
+
+def scoped(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
+    """Persist ``df`` at ``level`` and register it with the innermost open
+    ``cache_scope()``. With no scope open this is a plain persist and the
+    caller owns the cache (``unpersist()`` or ``spark.catalog.clearCache()``)."""
+    df = df.persist(level)
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1].append(df)
+    return df

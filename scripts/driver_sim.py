@@ -52,7 +52,7 @@ def main() -> int:
     oracles = entry.oracle_sql()
     names = sys.argv[1:] or [n for n in qs if n in oracles]
 
-    from news_crawler_slm_spark.session import get_spark
+    from news_crawler_slm_spark.session import cache_scope, get_spark
 
     spark = get_spark(app_name="driver-sim")
     con = duckdb.connect()
@@ -67,7 +67,8 @@ def main() -> int:
             print(f"{name}: SKIP (no oracle)")
             continue
         try:
-            sp = canon(qs[name](spark, SF_DIR).toPandas())
+            with cache_scope():
+                sp = canon(qs[name](spark, SF_DIR).toPandas())
             du = canon(con.sql(oracles[name]).df())
             rows = len(sp) == len(du)
             schema = list(sp.columns) == list(du.columns)

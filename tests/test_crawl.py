@@ -22,6 +22,7 @@ from news_crawler_slm_spark.crawl.rounds import build_round, init_state, run_cra
 from news_crawler_slm_spark.crawl.semantics import canonical_url
 from news_crawler_slm_spark.crawl.simulator import simulate
 from news_crawler_slm_spark.functions import urls as U
+from news_crawler_slm_spark.session import cache_scope
 from news_crawler_slm_spark.sources.synthetic_web import WebScale, generate_web, web_dataframes
 from news_crawler_slm_spark.sources.tables import SnapshotCatalog
 
@@ -324,17 +325,35 @@ def test_first_round_budgets(spark):
     no host exceeds floor(round_budget/delay)."""
     dfs = web_dataframes(spark, SCALE)
     state = init_state(spark, dfs["seeds"], dfs["robots"], PARAMS)
-    deltas, popped, fetched_raw, _n, _lat = build_round(
-        state, dfs["robots"], synthetic_fetcher(dfs["web"]), PARAMS
-    )
-    per_host = {
-        r["host"]: r["n"]
-        for r in deltas.log_delta.groupBy("host").agg(F.count("*").alias("n")).collect()
-    }
-    popped.unpersist()
-    fetched_raw.unpersist()
+    with cache_scope():
+        deltas, _popped, _slim, _n, _lat = build_round(
+            state, dfs["robots"], synthetic_fetcher(dfs["web"]), PARAMS
+        )
+        per_host = {
+            r["host"]: r["n"]
+            for r in deltas.log_delta.groupBy("host").agg(F.count("*").alias("n")).collect()
+        }
     assert per_host.get("news1.example.com", 0) <= 1
     assert all(n <= 6 for n in per_host.values())
+
+
+def test_run_crawl_releases_round_caches_when_commit_raises(spark, tmp_path, monkeypatch):
+    """A round whose commit raises must not leak its caches (the pop and the
+    html-free fetch projection): run_crawl re-raises and the round's cache
+    scope has released them on the way out."""
+    dfs = web_dataframes(spark, WebScale(n_hosts=2, pages_per_host_max=4))
+
+    def failing_commit(self, *args, **kwargs):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(SnapshotCatalog, "commit", failing_commit)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="commit failed"):
+        run_crawl(
+            spark, str(tmp_path / "cat"), dfs["seeds"], dfs["robots"],
+            synthetic_fetcher(dfs["web"]), PARAMS, max_rounds=1,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @given(

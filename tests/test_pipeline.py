@@ -13,6 +13,7 @@ from news_crawler_slm_spark.plans.pipeline import (
     PreprocessParams,
     preprocess_pages,
 )
+from news_crawler_slm_spark.session import cache_scope
 from news_crawler_slm_spark.sources.synthetic_web import WebScale, generate_web
 
 PARAMS = PreprocessParams(train_frac=0.8, token_threshold=60, cap_n=3)
@@ -452,14 +453,13 @@ def test_prepare_training_data_composite_gate_matches_oracle(spark):
     assert got == want
 
 
-def test_training_data_session_releases_cache(spark):
+def test_training_data_scope_releases_cache(spark):
     """ADVICE r03: prepare_training_data's internal persist leaked across
-    repeated runs. The scoped API must return the persistent-RDD count to
-    its baseline after each run, while producing the identical result."""
+    repeated runs. Run inside a cache_scope, it must leave the SQL cache
+    manager empty after each run, while producing the identical result."""
     from news_crawler_slm_spark.plans.training import (
         TrainingPrepParams,
         prepare_training_data,
-        training_data_session,
     )
 
     docs = [(i, " ".join(f"w{i}t{j}" for j in range(5 + i % 7))) for i in range(60)]
@@ -472,14 +472,38 @@ def test_training_data_session_releases_cache(spark):
         # context cleaner) deliberately don't count here
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
+    spark.catalog.clearCache()
     want = {tuple(r) for r in prepare_training_data(df, params).collect()}
-    assert not sql_cache_empty()  # the unscoped API leaks its cache (doc'd)
+    assert not sql_cache_empty()  # with no scope open the caller owns it
     spark.catalog.clearCache()
     for _ in range(2):
-        with training_data_session(df, params) as out:
-            got = {tuple(r) for r in out.collect()}
+        with cache_scope():
+            got = {tuple(r) for r in prepare_training_data(df, params).collect()}
+            assert not sql_cache_empty()  # the plan read its cache
         assert got == want
         assert sql_cache_empty()  # released on scope exit, every run
+
+
+def test_training_exact_dedup_carries_map_column(spark):
+    """docs may carry columns of any type (``select('*')`` keeps them
+    through the gate): the exact-dedup keeper orders by doc_id alone, so a
+    map column, which has no ordering, rides along and the min doc_id per
+    text still wins."""
+    from news_crawler_slm_spark.plans.training import (
+        TrainingPrepParams,
+        prepare_training_data,
+    )
+
+    dup = "one two three four five six"
+    docs = [
+        (i, dup if i % 3 == 0 else f"unique words of document number {i}", {"i": i})
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string, meta map<string,int>")
+    with cache_scope():
+        out = prepare_training_data(df, TrainingPrepParams(token_budget=64, neardup=False))
+        got = {r["doc_id"] for r in out.collect()}
+    assert got == {i for i in range(12) if i % 3 or i == 0}
 
 
 def test_corpus_from_crawl_matches_sequential_oracle(spark, tmp_path):
@@ -519,15 +543,16 @@ def test_corpus_from_crawl_matches_sequential_oracle(spark, tmp_path):
     # stages and making the equality vacuous
     pp = PreprocessParams(train_frac=0.8, token_threshold=100000, cap_n=5)
     tp = TrainingPrepParams(token_budget=256, gate="composite")
-    res = corpus_from_crawl(catalog, pp, tp)
-    got_final = {
-        (r["url"], r["publisher"], r["split"], r["position"], r["text"])
-        for r in res.pre.final.collect()
-    }
-    got_packed = {
-        r["doc_id"]: (r["n_tokens"], r["shuffle_key"], r["cum_before"], r["batch_id"])
-        for r in res.training.collect()
-    }
+    with cache_scope():
+        res = corpus_from_crawl(catalog, pp, tp)
+        got_final = {
+            (r["url"], r["publisher"], r["split"], r["position"], r["text"])
+            for r in res.pre.final.collect()
+        }
+        got_packed = {
+            r["doc_id"]: (r["n_tokens"], r["shuffle_key"], r["cum_before"], r["batch_id"])
+            for r in res.training.collect()
+        }
 
     # ---- sequential oracle over the same catalog ----
     rows = catalog.read_table("pages").collect()
@@ -642,13 +667,13 @@ def test_corpus_from_crawl_incremental_cdc(spark, tmp_path):
 
     pp = PreprocessParams(train_frac=0.8, token_threshold=100000, cap_n=5)
     tp = TrainingPrepParams(token_budget=256, gate="composite")
-    res = corpus_from_crawl(catalog, pp, tp, since_snapshot=sid)
-
-    # partition guard: the gate's four scans must see the re-spread frame
-    assert res.docs.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    with cache_scope():
+        res = corpus_from_crawl(catalog, pp, tp, since_snapshot=sid)
+        # partition guard: the gate's four scans must see the re-spread frame
+        assert res.docs.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        got_docs = {r["doc_id"] for r in res.docs.collect()}
 
     # the incremental corpus is the full pipeline over ONLY the delta urls
-    got_docs = {r["doc_id"] for r in res.docs.collect()}
     want_urls = {u for u, fr in delta}
     assert got_docs  # the delta produced a corpus
     assert got_docs <= {md5_long_py(u) for u in want_urls}
@@ -657,7 +682,6 @@ def test_corpus_from_crawl_incremental_cdc(spark, tmp_path):
         md5_long_py(u) for u in want_urls
     }
     assert not (got_docs & pre_only)
-    res.docs.unpersist()
 
 
 def test_doc_token_chunks_map_only_plan_and_coverage(spark):

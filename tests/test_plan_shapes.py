@@ -17,6 +17,7 @@ import pytest
 
 from news_crawler_slm_spark.crawl.rounds import build_round, init_state, synthetic_fetcher
 from news_crawler_slm_spark.crawl.semantics import CrawlParams
+from news_crawler_slm_spark.session import cache_scope
 from news_crawler_slm_spark.sources.synthetic_web import WebScale, web_dataframes
 
 
@@ -43,15 +44,14 @@ def _plan(df) -> str:
 
 
 def test_fetch_join_broadcasts_popped_and_html_never_shuffles(spark):
-    deltas, popped, slim = _round_plans(spark)
-    plan = _plan(deltas.pages_delta)
+    with cache_scope():
+        deltas, _popped, _slim = _round_plans(spark)
+        plan = _plan(deltas.pages_delta)
     assert "BroadcastHashJoin" in plan
     # every Exchange block must be free of the html column: html flows
     # scan -> broadcast-probe -> clean UDF without crossing a shuffle
     for ex in re.finditer(r"Exchange [^\n]*\n", plan):
         assert "html" not in ex.group(0), ex.group(0)
-    popped.unpersist()
-    slim.unpersist()
 
 
 def test_frontier_pop_no_global_frontier_sort(spark):
@@ -61,22 +61,20 @@ def test_frontier_pop_no_global_frontier_sort(spark):
     raw pop (what build_round returns/caches) has NO single-partition
     exchange at all; the seq assignment on top is size-aware (attach_seq)
     and its scale path is plan-checked in test_crawl.py."""
-    deltas, popped, slim = _round_plans(spark)
-    plan = _plan(popped)
+    with cache_scope():
+        _deltas, popped, _slim = _round_plans(spark)
+        plan = _plan(popped)
     # "Sort [...], true, 0" would be a global sort of the frontier
     assert not re.search(r"Sort \[[^\]]*\], true,", plan), "global sort found"
     assert "Exchange SinglePartition" not in plan
-    popped.unpersist()
-    slim.unpersist()
 
 
 def test_seen_dedup_exchanges_carry_no_html(spark):
-    deltas, popped, slim = _round_plans(spark)
-    plan = _plan(deltas.frontier)
+    with cache_scope():
+        deltas, _popped, _slim = _round_plans(spark)
+        plan = _plan(deltas.frontier)
     for ex in re.finditer(r"Exchange [^\n]*\n", plan):
         assert "html" not in ex.group(0), ex.group(0)
-    popped.unpersist()
-    slim.unpersist()
 
 
 def test_gopher_quality_flags_is_shuffle_free(spark):

@@ -12,6 +12,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from news_crawler_slm_spark.session import cache_scope
 
 SF = "/root/testdata/sf0.01"
 TABLES = [
@@ -46,6 +47,10 @@ def _value_multiset(cols, rows):
     return sorted("|".join(_norm_cell(r[i]) for i in order) for r in rows)
 
 
+def _sql_cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 ORACLE_QUERIES = sorted(entry_mod.oracle_sql().keys())
 ALL_QUERIES = sorted(entry_mod.queries().keys())
 
@@ -53,9 +58,12 @@ ALL_QUERIES = sorted(entry_mod.queries().keys())
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
-    sdf = q(spark, SF)
-    scols = [c.lower() for c in sdf.columns]
-    srows = [tuple(r) for r in sdf.collect()]
+    spark.catalog.clearCache()
+    with cache_scope():
+        sdf = q(spark, SF)
+        scols = [c.lower() for c in sdf.columns]
+        srows = [tuple(r) for r in sdf.collect()]
+    assert _sql_cache_empty(spark), f"{name}: cache outlived its scope"
 
     res = duck.execute(entry_mod.oracle_sql()[name])
     dcols = [d[0].lower() for d in res.description]
@@ -71,9 +79,12 @@ def test_query_matches_oracle(spark, duck, name):
 
 @pytest.mark.parametrize("name", [n for n in ALL_QUERIES if n not in ORACLE_QUERIES])
 def test_rows_only_queries_run(spark, name):
-    df = entry_mod.queries()[name](spark, SF)
-    assert df.count() >= 0
-    assert len(df.schema) > 0
+    spark.catalog.clearCache()
+    with cache_scope():
+        df = entry_mod.queries()[name](spark, SF)
+        assert df.count() >= 0
+        assert len(df.schema) > 0
+    assert _sql_cache_empty(spark), f"{name}: cache outlived its scope"
 
 
 def test_entry_smoke(spark):
